@@ -148,7 +148,9 @@ def main() -> None:
     # destroys the 32-core per-query numbers — r10's PERF per_query and
     # scaling tables were empty for exactly this reason (VERDICT r10
     # item 2: observability only; stdout contract unchanged).
-    detail["cpus"] = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from scotustician_spark.session import host_defaults
+
+    detail["cpus"] = host_defaults()[0]
     for fname in ("BENCH_DETAIL.json", f"BENCH_DETAIL_c{detail['cpus']}.json"):
         with open(os.path.join(here, fname), "w") as fh:
             json.dump(detail, fh, indent=1)

@@ -223,8 +223,17 @@ def register_models(
 
 def run_data_tests(spark: SparkSession) -> dict[str, int]:
     """dbt-test analog: violation counts per declared test (all must
-    be 0). Requires register_models to have run."""
-    return {name: spark.sql(sql).count() for name, sql in DATA_TESTS.items()}
+    be 0). Requires register_models to have run.
+
+    All tests run as ONE action: each test's SQL becomes a
+    ``(name, count)`` branch of a ``UNION ALL``, so a run launches one
+    collect instead of one count per test."""
+    union = "\nUNION ALL\n".join(
+        f"SELECT '{name}' AS test, count(*) AS n FROM ({sql}) AS t"
+        for name, sql in DATA_TESTS.items()
+    )
+    counts = {r["test"]: r["n"] for r in spark.sql(union).collect()}
+    return {name: counts[name] for name in DATA_TESTS}
 
 
 def materialize_gold(spark: SparkSession, out_dir: str) -> None:

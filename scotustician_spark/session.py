@@ -13,7 +13,40 @@ import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_defaults() -> tuple[int, str]:
+    """``(cpus, driver_memory)`` sized to the host this process runs on.
+
+    CPUs are the ones the process may be scheduled on
+    (``sched_getaffinity``: a container's cpuset, not the machine's
+    core count). Driver memory is half of ``MemTotal``, clamped to
+    1–24 GiB: in local mode executors are threads in the driver JVM,
+    so this one heap serves every task, and the other half stays for
+    the Python workers and the OS. ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_GRAFT_DRIVER_MEM`` override either value. Read at call
+    time, so a process that sets them after import still gets them.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus is None:
+        try:
+            cpus = len(os.sched_getaffinity(0))
+        except AttributeError:  # not Linux
+            cpus = os.cpu_count() or 1
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem is None:
+        mem = f"{min(24 * 1024, max(1024, _mem_total_mb() // 2))}m"
+    return int(cpus), mem
+
+
+def _mem_total_mb() -> int:
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return 4096  # unknown host: a 2 GiB driver
 
 
 def get_spark(
@@ -25,10 +58,11 @@ def get_spark(
 
     At cluster scale the same settings apply; only ``master`` and the
     memory sizing change (driver memory is the single knob in local
-    mode because executors are threads in the driver JVM).
+    mode because executors are threads in the driver JVM). Locally both
+    come from ``host_defaults``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sp = shuffle_partitions if shuffle_partitions is not None else int(cpus)
+    cpus, driver_mem = host_defaults()
+    sp = shuffle_partitions if shuffle_partitions is not None else cpus
     # local mode shuffles through spark.local.dir; tmpfs removes disk I/O
     # from the shuffle path (on a cluster this maps to fast local SSDs)
     local_dir = "/dev/shm/spark-local"
@@ -48,7 +82,7 @@ def get_spark(
         # Python DataSource filter pushdown (sources/oa_datasource.py
         # prunes term partitions through it); off by default in 4.1
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # PySpark 4's DataFrame-debugging call-site capture wraps EVERY
@@ -156,7 +190,7 @@ def repartition_for_compute(df, min_partitions: int | None = None, by=None):
     leaving the map-side-combine path untouched (r10: case_summaries
     measured 1.22 → 0.80 s at sf0.1).
     """
-    target = min_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    target = min_partitions or host_defaults()[0]
     plan = df._jdf.queryExecution().analyzed().toString()
     # Node-name match, anchored at the operator position of a plan-tree
     # line (start-of-line after the `:+- ` indent art), NOT a bare

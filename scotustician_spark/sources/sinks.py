@@ -82,9 +82,15 @@ def idempotent_append(
     shuffle key — no full-row exchange. Returns insert/skip counts as
     the reference logs them (helpers.py:287-296).
     """
+    from pyspark.sql import Observation
+
     spark = df.sparkSession
-    incoming = df.dropDuplicates(key_cols)
-    n_in = incoming.count()
+    # the batch size rides along as an observed metric of the one
+    # action below, instead of a count() of its own
+    seen = Observation()
+    incoming = df.dropDuplicates(key_cols).observe(
+        seen, F.count(F.lit(1)).alias("n")
+    )
     if _has_data(spark, path):
         existing = spark.read.parquet(path).select(*key_cols)
         # NULL-SAFE anti-join: a plain key equi-join never matches a
@@ -98,10 +104,17 @@ def idempotent_append(
         fresh = incoming.join(existing, cond, "left_anti")
     else:
         fresh = incoming
-    n_new = fresh.count()
-    if n_new:
-        fresh.write.mode("append").parquet(path)
-    return {"inserted": n_new, "skipped": n_in - n_new}
+    # run the anti-join once: the count fills the cache and the write
+    # reads it; with nothing new, nothing is written (an empty append
+    # would still add a file)
+    fresh.cache()
+    try:
+        n_new = fresh.count()
+        if n_new:
+            fresh.write.mode("append").parquet(path)
+    finally:
+        fresh.unpersist(blocking=False)
+    return {"inserted": n_new, "skipped": seen.get["n"] - n_new}
 
 
 def count_gate(df: DataFrame, min_rows: int = 1, what: str = "stage") -> int:
@@ -115,13 +128,21 @@ def count_gate(df: DataFrame, min_rows: int = 1, what: str = "stage") -> int:
 
 def run_summary(df: DataFrame, group_col: str) -> DataFrame:
     """S5/A10 run-summary sink content: global totals + per-group
-    counts in one small DataFrame (ingest/main.py:313-323)."""
-    per_group = df.groupBy(group_col).agg(F.count("*").alias("n"))
-    total = df.agg(
-        F.count("*").alias("n"), F.lit("__total__").alias(group_col)
-    ).select(group_col, "n")
-    return per_group.unionByName(total).withColumn(
-        "generated_at", F.current_timestamp()
+    counts in one small DataFrame (ingest/main.py:313-323).
+
+    One ``rollup`` pass yields both: ``grouping()`` marks the grand
+    total row, which is labelled ``__total__``, so a genuine NULL group
+    stays a NULL row of its own."""
+    return (
+        df.rollup(group_col)
+        .agg(F.count("*").alias("n"), F.grouping(group_col).alias("__total"))
+        .select(
+            F.when(F.col("__total") == 1, F.lit("__total__"))
+            .otherwise(F.col(group_col))
+            .alias(group_col),
+            "n",
+        )
+        .withColumn("generated_at", F.current_timestamp())
     )
 
 

@@ -15,6 +15,7 @@ from scotustician_spark.documents import (
     split_quarantine,
 )
 from scotustician_spark.documents.medallion import (
+    DATA_TESTS,
     MODELS,
     register_models,
     run_data_tests,
@@ -54,6 +55,38 @@ def test_model_matches_duckdb(model, model_env):
 
 def test_data_tests_pass(spark, model_env):
     assert all(v == 0 for v in run_data_tests(spark).values())
+
+
+def test_data_tests_count_violations_in_one_action(spark):
+    """The single UNION ALL action reports, per test, exactly what that
+    test's own SQL counts. A fresh session keeps these temp views away
+    from the models the other tests registered."""
+    s = spark.newSession()
+    s.createDataFrame(
+        [("c1", 0, 1.0), ("c1", 0, -2.0), (None, 1, 3.0), ("c2", None, None)],
+        "case_id string, utterance_index int, duration_seconds double",
+    ).createOrReplaceTempView("bronze_oa_text")
+    s.createDataFrame(
+        [("c1", "o", 0), ("c1", "o", 0), ("c1", "o", 1)],
+        "case_id string, oa_id string, section_id int",
+    ).createOrReplaceTempView("bronze_document_chunks")
+    want = {name: s.sql(sql).count() for name, sql in DATA_TESTS.items()}
+    assert want == {
+        "not_null_keys": 2,
+        "unique_utterance_key": 1,
+        "unique_chunk_key": 1,
+        "positive_durations": 1,
+    }
+    store = s._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_execution_id() -> int:
+        bus.waitUntilEmpty()
+        return store.executionsList().last().executionId()
+
+    first = last_execution_id()
+    assert run_data_tests(s) == want
+    assert last_execution_id() - first == 1
 
 
 def test_gold_rows_nonempty(model_env):

@@ -11,17 +11,49 @@ from scotustician_spark.pipeline import run_pipeline
 from tests.fixtures_oa import make_corpus, write_corpus_json
 
 
+#: jobs one run of the module fixture launches (10 docs, 1 junk file, every
+#: sink, stage metrics on). Measured at 48 on 4 CPUs; recomputing the
+#: embeddings and case vectors for each consumer took 61. The slack
+#: absorbs AQE splitting a shuffle stage differently; a reintroduced
+#: recompute costs several jobs and trips it.
+JOB_BUDGET = 52
+
+
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
 @pytest.fixture(scope="module")
-def result(spark, tmp_path_factory):
+def pipeline_run(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("e2e")
     write_corpus_json(make_corpus(n_docs=10, seed=5), str(d / "corpus"), junk=1)
-    return run_pipeline(
-        spark,
-        str(d / "corpus"),
-        out_dir=str(d / "out"),
-        n_clusters=3,
-        collect_metrics=True,
-    ), d
+    sc = spark.sparkContext
+    before = _cache_entries(spark)
+    sc.setJobGroup("test_pipeline_budget", "run_pipeline job budget")
+    try:
+        res = run_pipeline(
+            spark,
+            str(d / "corpus"),
+            out_dir=str(d / "out"),
+            n_clusters=3,
+            collect_metrics=True,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_pipeline_budget")
+    return {
+        "res": res,
+        "dir": d,
+        "cache_before": before,
+        "cache_after": _cache_entries(spark),
+        "jobs": len(jobs),
+    }
+
+
+@pytest.fixture(scope="module")
+def result(pipeline_run):
+    return pipeline_run["res"], pipeline_run["dir"]
 
 
 def test_gates_and_data_tests(result):
@@ -82,3 +114,26 @@ def test_stage_metrics_relation(result, spark):
     # persisted alongside the other run artifacts
     persisted = spark.read.parquet(str(d / "out" / "stage_metrics"))
     assert persisted.count() == m.count()
+
+
+def test_run_releases_its_caches(pipeline_run):
+    """Every cache the run creates is unpersisted before it returns."""
+    assert pipeline_run["cache_after"] <= pipeline_run["cache_before"]
+
+
+def test_job_budget(pipeline_run):
+    """Each intermediate with several consumers is computed once; a
+    reintroduced recompute shows up as extra jobs."""
+    assert 0 < pipeline_run["jobs"] <= JOB_BUDGET, pipeline_run["jobs"]
+
+
+def test_all_junk_corpus_fails_at_ingest_gate(spark, tmp_path):
+    """A corpus with no valid document stops at the first gate, before
+    any sink writes, and leaves no cache behind."""
+    write_corpus_json([], str(tmp_path / "corpus"), junk=2)
+    out = tmp_path / "out"
+    before = _cache_entries(spark)
+    with pytest.raises(RuntimeError, match="ingested documents has 0 rows"):
+        run_pipeline(spark, str(tmp_path / "corpus"), out_dir=str(out))
+    assert not out.exists() or not any(out.iterdir())
+    assert _cache_entries(spark) <= before

@@ -48,6 +48,28 @@ def test_idempotent_append_null_keys(spark, tmp_path):
     assert spark.read.parquet(path).count() == 2
 
 
+def _listing(path: str) -> dict[str, tuple[int, int]]:
+    import os
+
+    out = {}
+    for d, _, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out[os.path.relpath(os.path.join(d, f), path)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_idempotent_append_replay_writes_nothing(spark, tmp_path):
+    """A replayed batch inserts nothing and touches no file: an empty
+    append would still add a part file and rewrite ``_SUCCESS``."""
+    path = str(tmp_path / "replay")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    assert idempotent_append(df, path, ["k"]) == {"inserted": 2, "skipped": 0}
+    files = _listing(path)
+    assert idempotent_append(df, path, ["k"]) == {"inserted": 0, "skipped": 2}
+    assert _listing(path) == files
+
+
 def test_merge_apply_cdc_null_and_unknown_ops_upsert(spark, tmp_path):
     """Round-6 review: `op != 'D'` is NULL for a NULL op, so a
     malformed change row fell out of BOTH branches while its key still
@@ -97,6 +119,20 @@ def test_quarantine_and_summary(spark, tmp_path):
     ).collect()
     d = {r["g"]: r["n"] for r in s}
     assert d == {"a": 2, "b": 1, "__total__": 3}
+
+
+def test_run_summary_null_group_is_not_the_total(spark):
+    """A genuine NULL group keeps its own row; only the grand total is
+    labelled ``__total__``."""
+    s = run_summary(
+        spark.createDataFrame([("a",), (None,), (None,)], "g string"), "g"
+    ).collect()
+    assert sorted((r["g"] or "<null>", r["n"]) for r in s) == [
+        ("<null>", 2),
+        ("__total__", 3),
+        ("a", 1),
+    ]
+    assert all(r["generated_at"] is not None for r in s)
 
 
 def test_fetch_keys_retry_and_quarantine(spark):

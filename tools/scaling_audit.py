@@ -869,10 +869,7 @@ def main() -> None:
     from scotustician_spark.plans import QUERY_REGISTRY
     from scotustician_spark.session import get_spark
 
-    spark = get_spark(
-        "scaling-audit",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-    )
+    spark = get_spark("scaling-audit")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     x1000_dir = os.path.join(repo, "spark-warehouse", "sfx10_synth")
     build_x1000_tier(spark, "/root/testdata/sf0.1", x1000_dir)

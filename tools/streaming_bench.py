@@ -172,10 +172,7 @@ def main() -> None:
 
     if not os.path.exists(f"{TIER}/embeddings.parquet/_SUCCESS"):
         sys.exit("x10 tier missing — run tools/scaling_audit.py first")
-    spark = get_spark(
-        "streaming-bench",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-    )
+    spark = get_spark("streaming-bench")
     work_root = os.path.join(REPO, "spark-warehouse", "stream_bench")
     shutil.rmtree(work_root, ignore_errors=True)
 
