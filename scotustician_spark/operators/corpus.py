@@ -421,7 +421,6 @@ def source_overlap_sketch(
     text_col: str = "text",
     n: int = 3,
     num_hashes: int = 128,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """MinHash estimate of pairwise source Jaccard in ONE bounded pass
     — the at-scale arm of ``source_overlap`` (VERDICT r6 #3: the exact
@@ -429,7 +428,7 @@ def source_overlap_sketch(
 
     min over a UNION of sets is the min of per-set minima, so the
     per-source signature is the element-wise MIN of the per-document
-    in-row signatures (``dedup.minhash_signature_*`` kernels — one md5
+    in-row signatures (``dedup.minhash_signature_pandas`` — one md5
     per distinct shingle, k universal hashes, pure map). The only
     shuffle carries ``num_hashes`` (grp, pos, v) rows per document,
     partial-aggregated map-side to #sources × num_hashes per
@@ -445,15 +444,15 @@ def source_overlap_sketch(
     postings for them.
     """
     from ..session import repartition_for_compute
-    from .dedup import _minhash_sig
+    from .dedup import minhash_signature_pandas
 
     sig_long = (
         repartition_for_compute(df)
         .select(
             F.col(group_col).alias("grp"),
-            F.posexplode(_minhash_sig(text_col, n, num_hashes, kernel)).alias(
-                "pos", "v"
-            ),
+            F.posexplode(
+                minhash_signature_pandas(text_col, n, num_hashes)
+            ).alias("pos", "v"),
         )
         .groupBy("grp", "pos")
         .agg(F.min("v").alias("v"))

@@ -215,7 +215,8 @@ def minhash_signature_array(
     distinct AND a groupBy shuffle) with zero data movement: the only
     thing that ever leaves the scan stage is the signature itself.
     Identical arithmetic to the SQL-oracle formulation (min over the
-    same distinct-shingle hash set).
+    same distinct-shingle hash set). The operators run the faster
+    ``minhash_signature_pandas``; this form is its test reference.
     """
     sh = F.array_distinct(word_shingles(text_col, n))
     hs = F.transform(
@@ -309,28 +310,17 @@ def minhash_signature_pandas(
     return F.pandas_udf(ArrayType(LongType()))(_mh)(_colref(text_col))
 
 
-def _minhash_sig(
-    text_col: Column | str, n: int, num_hashes: int, kernel: str
-) -> F.Column:
-    return (
-        minhash_signature_pandas(text_col, n, num_hashes)
-        if kernel == "pandas"
-        else minhash_signature_array(text_col, n, num_hashes)
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
     num_hashes: int = 16,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """Per-document MinHash signature: (doc_id, mh array<long>)."""
     return repartition_for_compute(df).select(
         F.col(id_col).alias("doc_id"),
-        _minhash_sig(text_col, n, num_hashes, kernel).alias("mh"),
+        minhash_signature_pandas(text_col, n, num_hashes).alias("mh"),
     )
 
 
@@ -341,7 +331,6 @@ def minhash_bands(
     n: int = 3,
     num_hashes: int = 16,
     band_size: int = 4,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """(doc_id, band, band_sig) LSH band relation — the persistable
     *index* side of MinHash LSH: computed entirely in-row on the scan
@@ -378,28 +367,16 @@ def minhash_bands(
             ),
         )
 
-    base = repartition_for_compute(df)
-    if kernel == "pandas":
-        # materialize the UDF signature as a real column in its own
-        # projection (one ArrowEvalPython pass), then band off the
-        # column reference — wrapping a Python UDF in the _let HOF
-        # would push it into interpreted per-reference evaluation
-        # (measured slower than the pure expression form)
-        sigd = base.select(
-            F.col(id_col).alias("doc_id"),
-            minhash_signature_pandas(text_col, n, num_hashes).alias("__mh"),
-        )
-        return sigd.select(
-            "doc_id", F.explode(_bands_of(F.col("__mh"))).alias("b")
-        ).select("doc_id", "b.band", "b.band_sig")
-    # expression kernel: bind the minima array once (_let), then derive
-    # every band sig from the bound variable — referencing the aggregate
-    # n_bands×band_size times directly would re-run it at each site.
-    bands_arr = _let(
-        minhash_signature_array(text_col, n, num_hashes), _bands_of
+    # materialize the UDF signature as a real column in its own
+    # projection (one ArrowEvalPython pass), then band off the column
+    # reference — wrapping a Python UDF in the _let HOF would push it
+    # into interpreted per-reference evaluation
+    sigd = repartition_for_compute(df).select(
+        F.col(id_col).alias("doc_id"),
+        minhash_signature_pandas(text_col, n, num_hashes).alias("__mh"),
     )
-    return base.select(
-        F.col(id_col).alias("doc_id"), F.explode(bands_arr).alias("b")
+    return sigd.select(
+        "doc_id", F.explode(_bands_of(F.col("__mh"))).alias("b")
     ).select("doc_id", "b.band", "b.band_sig")
 
 
@@ -411,7 +388,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 16,
     band_size: int = 4,
     max_bucket_size: int | None = None,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """LSH candidate pairs: documents sharing any band signature.
 
@@ -423,7 +399,7 @@ def minhash_lsh_candidates(
     is the point of LSH at corpus scale — pair cost tracks actual
     collisions, never n².
     """
-    bands = minhash_bands(df, id_col, text_col, n, num_hashes, band_size, kernel)
+    bands = minhash_bands(df, id_col, text_col, n, num_hashes, band_size)
     # group each (band, band_sig) bucket ONCE and emit its id pairs
     # in-row, instead of a self-join: the signature map runs a single
     # time (Spark does not reuse the exchange across self-join sides),
@@ -471,7 +447,6 @@ def incremental_dedup(
     n: int = 3,
     num_hashes: int = 16,
     band_size: int = 4,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """Dedup a NEW batch against an already-indexed corpus without
     touching the base text — the scheduled-ingest twin of the one-shot
@@ -500,7 +475,7 @@ def incremental_dedup(
     exact = d.join(
         base_fps.select("fp").distinct().withColumn("__hit", F.lit(1)), "fp", "left"
     ).select("doc_id", (F.col("__hit") == 1).alias("is_exact_dup"))
-    delta_bands = minhash_bands(delta, id_col, text_col, n, num_hashes, band_size, kernel)
+    delta_bands = minhash_bands(delta, id_col, text_col, n, num_hashes, band_size)
     near = (
         delta_bands.join(
             base_bands.select(
@@ -534,7 +509,9 @@ def simhash_signature_expr(text_col: Column | str, bits: int = 16) -> F.Column:
     sign vector is the signature, emitted as a bit-string so any SQL
     engine can reproduce it. Votes 33-64 come from a second,
     salt-suffixed md5 (``md5(token || '#')``) — still one fixed
-    expression per token, still oracle-reproducible.
+    expression per token, still oracle-reproducible. The operators run
+    the faster ``simhash_signature_pandas``; this form is its test
+    reference.
     """
     assert bits <= 64, "two md5s provide 64 digit votes"
     from ..functions.text import tokens
@@ -658,7 +635,7 @@ def simhash_signature_pandas(text_col: Column | str, bits: int = 16) -> F.Column
 
 
 def simhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 16, kernel: str = "pandas"
+    df: DataFrame, id_col: str, text_col: str, bits: int = 16
 ) -> DataFrame:
     """(doc_id, simhash bit-string) — a pure map stage: the tokenize/
     hash/vote pipeline never leaves the row, so at 100 TB this scales
@@ -666,20 +643,16 @@ def simhash_signatures(
     few bits (compare via hamming — or band the bit-string for
     LSH-style candidate generation). Zero-token documents are absent
     from the output (NULL signature filtered), matching the oracle's
-    unnest semantics.
-
-    ``kernel``: "pandas" (default — Arrow-batched numpy with vocab
-    caching, ~3x faster) or "expr" (pure Catalyst expression, zero
-    Python dependency). Outputs are bit-identical.
+    unnest semantics. Signatures come from the Arrow-batched kernel
+    (``simhash_signature_pandas``, ~3x faster than the bit-identical
+    ``simhash_signature_expr``).
     """
-    sig = (
-        simhash_signature_pandas(text_col, bits)
-        if kernel == "pandas"
-        else simhash_signature_expr(text_col, bits)
-    )
     return (
         repartition_for_compute(df)
-        .select(F.col(id_col).alias("doc_id"), sig.alias("simhash"))
+        .select(
+            F.col(id_col).alias("doc_id"),
+            simhash_signature_pandas(text_col, bits).alias("simhash"),
+        )
         .filter(F.col("simhash").isNotNull())
     )
 
@@ -691,7 +664,6 @@ def simhash_near_pairs(
     bits: int = 16,
     n_bands: int = 4,
     max_hamming: int = 2,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """Near-duplicate pairs from banded SimHash: signatures band into
     ``n_bands`` sub-signatures; documents sharing ANY band are
@@ -718,11 +690,7 @@ def simhash_near_pairs(
     assert bits % n_bands == 0
     assert bits <= 64, "signature must fit a long"
     width = bits // n_bands
-    sig = (
-        simhash_signature_pandas(text_col, bits)
-        if kernel == "pandas"
-        else simhash_signature_expr(text_col, bits)
-    )
+    sig = simhash_signature_pandas(text_col, bits)
 
     def _to_long(sig_col: F.Column) -> F.Column:
         # conv(bin, 2, 10) returns a DECIMAL STRING; a 64-bit value can
@@ -894,7 +862,6 @@ def update_dedup_index(
     n: int = 3,
     num_hashes: int = 16,
     band_size: int = 4,
-    kernel: str = "pandas",
 ) -> dict[str, int]:
     """Maintain the persisted dedup index with a NEW batch — the write
     half of ``incremental_dedup`` (which probes these same relations):
@@ -914,7 +881,7 @@ def update_dedup_index(
         F.col(id_col).alias("doc_id"), fingerprint(text_col).alias("fp")
     ).filter(F.col("fp").isNotNull())
     fp_stats = idempotent_append(fps, fp_path, ["doc_id"])
-    bands = minhash_bands(delta, id_col, text_col, n, num_hashes, band_size, kernel)
+    bands = minhash_bands(delta, id_col, text_col, n, num_hashes, band_size)
     band_stats = idempotent_append(bands, band_path, ["doc_id", "band"])
     return {
         "fp_inserted": fp_stats["inserted"],

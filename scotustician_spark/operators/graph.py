@@ -286,7 +286,6 @@ def label_propagation(
     checkpoint_dir: str | None = None,
     until_stable: bool = False,
     stats: dict | None = None,
-    broadcast_labels: bool | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007), determinized: label_0(v) = v; each round every vertex
@@ -336,15 +335,7 @@ def label_propagation(
     # (mins 2.04 s vs 2.41 broadcast / 2.11 pinned) — at this scale the
     # per-round cost is the job floor, AQE coalesces the tiny per-round
     # exchanges below the pinned width, and each broadcast build adds a
-    # driver job. The broadcast arm stays available for graphs whose
-    # vertex state fits (``broadcast_labels=True`` — §3.1: replaces
-    # every per-round labels exchange with a build); it is not worth a
-    # per-call count() action to auto-pick locally.
-    if broadcast_labels is None:
-        broadcast_labels = False
-
-    def _lbl_side(rel):
-        return F.broadcast(rel) if broadcast_labels else rel
+    # driver job. So the labels join stays a shuffle join.
 
     # round 1 collapses: with identity initial labels every neighbor
     # label is distinct (edges are deduped), so every count is 1 and
@@ -376,7 +367,7 @@ def label_propagation(
     rounds_run = 1
     for _ in range(rounds - 1):
         nbr = sym.join(
-            _lbl_side(labels.select(F.col("v").alias("__nv"), "lbl")),
+            labels.select(F.col("v").alias("__nv"), "lbl"),
             F.col("v") == F.col("__nv"),
         )
         cnt = nbr.groupBy("u", "lbl").agg(F.count("*").alias("c"))

@@ -1,7 +1,7 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Beyond-reference training-pipeline operators: media travel as opaque
-``binary`` columns with typed metadata structs; decode / feature
+``binary`` columns with typed metadata structs; real decode / feature
 extraction / frame sampling run as Arrow-batched ``mapInPandas``
 stages (the only sane shape for Python media libs at scale: one
 pandas batch per task, library initialized once per partition, bytes
@@ -10,7 +10,8 @@ never round-trip through the driver).
 Decode surface, by dependency weight:
 
 - ``mode='fake'`` (default for the oracle-gated queries): a
-  deterministic byte-level feature extractor (md5/length-derived) —
+  deterministic byte-level feature extractor (md5/length-derived),
+  planned as Catalyst expressions with no Python in the plan —
   SQL-reproducible, so the driver oracle verifies the full
   distributed path end-to-end.
 - ``mode='real'``: actual decoding. WAV audio decodes with the
@@ -23,9 +24,8 @@ Decode surface, by dependency weight:
   absent PIL it raises NotImplementedError at the one clearly-marked
   point. Unknown byte formats raise rather than silently fake.
 
-Either way the Spark-side plumbing (schema, Arrow batching,
-partitioning, UDF signatures, decoder-initialized-once-per-partition)
-is identical and tested.
+The real decoders share one Spark-side plumbing (schema, Arrow
+batching, partitioning), and it is tested.
 """
 
 from __future__ import annotations
@@ -56,7 +56,9 @@ MEDIA_META = T.StructType(
 
 def _fake_features(content: bytes, n_dims: int) -> list[float]:
     """Deterministic stand-in for a decoded-media feature vector:
-    dims j = ascii(md5_hex[j]) — reproducible in any engine."""
+    dims j = ascii(md5_hex[j]) — reproducible in any engine. The
+    Python reference that ``extract_media_features(mode='fake')``'s
+    Catalyst expressions are tested against."""
     h = hashlib.md5(content).hexdigest()
     return [float(ord(h[j])) for j in range(n_dims)]
 
@@ -280,23 +282,28 @@ def extract_media_features(
 ) -> DataFrame:
     """binary content → (id, n_bytes, content_md5, features[n_dims]).
 
-    Arrow-batched mapInPandas: each task processes whole record
-    batches; the decoder dispatch is resolved once per partition in
-    the generator prologue (the predict_batch_udf pattern, C4).
+    ``mode='fake'`` is the deterministic md5 extractor the SQL oracle
+    replays (``_fake_features``: dim j = ascii(md5_hex[j])), computed
+    as pure Catalyst expressions — md5 over the same bytes, and
+    ``ascii(hex char)`` is an exact small-integer double, so the rows
+    are bit-identical to the Python stand-in with zero Python in the
+    plan (guide §4.1 "prefer built-ins"). The md5 digest has 32 hex
+    digits, so ``n_dims`` must lie in 1..32.
 
-    ``mode='real'`` decodes: WAV via the stdlib ``wave`` parser
+    ``mode='real'`` decodes in an Arrow-batched mapInPandas: each task
+    processes whole record batches (the predict_batch_udf pattern,
+    C4). WAV via the stdlib ``wave`` parser
     (per-chunk RMS features), PNG pixels via the stdlib inflate +
     unfilter decoder, JPEG/GIF pixels via PIL (import-gated —
     NotImplementedError without it), anything else raises.
-    ``mode='fake'`` is the deterministic md5 extractor the SQL
-    oracle replays. ``mode='fake_sql'`` computes the SAME md5-derived
-    rows as pure Catalyst expressions — bit-identical output (md5 over
-    the same bytes, ``ascii(hex char)`` is an exact small-integer
-    double), zero Python in the plan (guide §4.1 "prefer built-ins";
-    the r10 chunk_embed_pool hash_sql discipline). The mapInPandas
-    arms stay for real decodes and the plumbing tests.
     """
-    if mode == "fake_sql":
+    if mode not in ("fake", "real"):
+        raise ValueError(f"mode must be 'fake' or 'real', got {mode!r}")
+    if mode == "fake":
+        if not 1 <= n_dims <= 32:
+            raise ValueError(
+                f"n_dims must be in 1..32 (md5 has 32 hex digits), got {n_dims}"
+            )
         md5c = F.md5(F.col(content_col))
         return repartition_for_compute(df.select(id_col, content_col)).select(
             F.col(id_col).cast("long").alias("id"),
@@ -309,8 +316,6 @@ def extract_media_features(
                 ]
             ).alias("features"),
         )
-    if mode not in ("fake", "real"):
-        raise ValueError(f"mode must be 'fake', 'fake_sql' or 'real', got {mode!r}")
 
     schema = T.StructType(
         [
@@ -322,8 +327,6 @@ def extract_media_features(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # decoder resolved once per partition, not once per row
-        extract = _real_features if mode == "real" else _fake_features
         for pdf in batches:
             content = pdf[content_col]
             yield pd.DataFrame(
@@ -334,7 +337,7 @@ def extract_media_features(
                         lambda b: hashlib.md5(bytes(b)).hexdigest()
                     ),
                     "features": content.map(
-                        lambda b: extract(bytes(b), n_dims)
+                        lambda b: _real_features(bytes(b), n_dims)
                     ),
                 }
             )

@@ -206,7 +206,6 @@ def chunk_boilerplate_removal(
     text_col: str,
     chunk_words: int = 8,
     df_cap: int = 2,
-    broadcast_hot: bool = True,
 ) -> DataFrame:
     """C4/RefinedWeb-style cross-document boilerplate removal: split
     every document into fixed-size word chunks, drop chunks whose
@@ -221,14 +220,10 @@ def chunk_boilerplate_removal(
     Plan shape: chunking is IN-ROW (slice over the token array — the
     chunk relation is born from a single explode, never a join);
     the only wide stages are the chunk-frequency count and the ordered
-    reassembly, both keyed well (md5 of chunk text / doc id). With
-    ``broadcast_hot`` the hot set (df > cap) joins broadcast — right
-    when the cap keeps it small relative to the corpus (the same skew
-    economics as the shingle df-cap in dedup). A low cap over a
-    boilerplate-heavy 100 TB corpus can make the hot set itself
-    large — set ``broadcast_hot=False`` there and the anti-join
-    becomes a plain shuffle join on the fingerprint, which AQE can
-    still convert back to broadcast if the runtime size allows.
+    reassembly, both keyed well (md5 of chunk text / doc id). The hot
+    set (df > cap) joins broadcast: the cap keeps it small relative to
+    the corpus (the same skew economics as the shingle df-cap in
+    dedup).
     """
     toks = _lower_tokens(text_col)
     # sequence(0, -1) would DESCEND ([0, -1]) — guard the zero-token
@@ -259,9 +254,8 @@ def chunk_boilerplate_removal(
         .filter(F.col("chunk_df") > df_cap)
         .select("fp")
     )
-    hot_side = F.broadcast(hot) if broadcast_hot else hot
     kept = chunks.join(
-        hot_side, F.md5(chunks["chunk"]) == hot["fp"], "left_anti"
+        F.broadcast(hot), F.md5(chunks["chunk"]) == hot["fp"], "left_anti"
     )
     reassembled = kept.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_kept"),
@@ -310,7 +304,6 @@ def contamination_pairs(
     id_col: str,
     text_col: str,
     n: int = 5,
-    kernel: str = "pandas",
     max_collect_chars: int = EVAL_COLLECT_CHAR_CAP,
 ) -> DataFrame:
     """Per corpus document: how many of its word ``n``-grams appear in
@@ -322,32 +315,27 @@ def contamination_pairs(
     Plan shape: the eval side is distilled to its DISTINCT shingle set
     (tiny — eval suites are KBs where the corpus is TBs) and either
     collected + ``SparkContext.broadcast`` into an Arrow-batched
-    kernel (``kernel="pandas"``, default — the eval hash set is built
-    ONCE per executor and each shingle is an O(1) probe; measured 2x
-    over the expression form, whose ``array_intersect`` rebuilds a
-    hash set of the broadcast array PER ROW), or broadcast as one
-    array row with in-row ``array_intersect`` (``kernel="expr"`` —
-    zero Python, zero driver action). Either way the corpus side is a
-    single map pass — no explode, no groupBy, no shuffle of corpus
-    data at all. NOTE the pandas kernel collects the eval shingle set
-    eagerly when the plan is BUILT (it is eval-suite-sized, not
-    corpus-sized); that collect is COUNT-GATED — if the eval set holds
-    more than ``max_collect_chars`` characters of text (measured by one
-    tiny agg action) the call falls back to the ``expr`` broadcast-join
-    formulation, which never materializes eval data on the driver.
+    kernel (the eval hash set is built ONCE per executor and each
+    shingle is an O(1) probe; measured 2x over the expression form,
+    whose ``array_intersect`` rebuilds a hash set of the broadcast
+    array PER ROW), or broadcast as one array row with in-row
+    ``array_intersect`` (zero Python, zero driver action). Either way
+    the corpus side is a single map pass — no explode, no groupBy, no
+    shuffle of corpus data at all. The kernel collects the eval
+    shingle set eagerly when the plan is BUILT (it is
+    eval-suite-sized, not corpus-sized); that collect is COUNT-GATED —
+    if the eval set holds more than ``max_collect_chars`` characters of
+    text (measured by one tiny agg action) the call takes the
+    broadcast-join formulation, which never materializes eval data on
+    the driver.
     """
-    if kernel == "pandas":
-        ev_chars = (
-            eval_set.agg(
-                F.sum(F.length(F.col(text_col))).alias("c")
-            ).collect()[0]["c"]
-            or 0
-        )
-        if ev_chars <= max_collect_chars:
-            return _contamination_pairs_pandas(
-                corpus, eval_set, id_col, text_col, n
-            )
-        # eval set too large to hold on the driver: distributed path
+    ev_chars = (
+        eval_set.agg(F.sum(F.length(F.col(text_col))).alias("c")).collect()[0]["c"]
+        or 0
+    )
+    if ev_chars <= max_collect_chars:
+        return _contamination_pairs_pandas(corpus, eval_set, id_col, text_col, n)
+    # eval set too large to hold on the driver: distributed path
     eval_arr = eval_set.select(
         F.explode(F.array_distinct(word_shingles(text_col, n))).alias("shingle")
     ).filter(F.col("shingle").isNotNull()).agg(

@@ -630,7 +630,9 @@ def _ivfpq_build_tables(
         # every collected value IS f32-representable on the float side)
         return f"CAST('{float(v)!r}' AS {t})"
 
-    def _raw_d2(df: DataFrame, vecs_by_group: list, vcol: str, float_arith: bool) -> DataFrame:
+    def _raw_d2(
+        df: DataFrame, vecs_by_group: list, vcol: str, width: int, float_arith: bool
+    ) -> DataFrame:
         """df + ``__draw`` = array<double> of RAW (unrounded) squared
         distances to every candidate, concatenated group-major.
 
@@ -645,7 +647,10 @@ def _ivfpq_build_tables(
         (d2r, index)-ascending argmin stay in the JVM (same round()
         expression as before), so the Python side never rounds.
         ``vecs_by_group``: list of groups, each a list of (offset,
-        candidate_vec) — offset slices ``vcol`` for PQ subspaces."""
+        candidate_vec) — offset slices ``vcol`` for PQ subspaces.
+        Every ``vcol`` value must hold exactly ``width`` elements: a
+        NULL or ragged vector raises instead of shifting the flattened
+        values of every later row in the batch."""
         import pyarrow as pa
 
         flat = [
@@ -668,8 +673,13 @@ def _ivfpq_build_tables(
                 col = batch.column(idx)
                 n = len(col)
                 vals = col.flatten().to_numpy(zero_copy_only=False)
-                width = len(vals) // n if n else 1
-                X = vals.reshape(n, width) if n else vals.reshape(0, width)
+                if col.null_count or len(vals) != n * width:
+                    raise ValueError(
+                        f"{vcol}: every vector must hold {width} values "
+                        f"(got {col.null_count} NULL vectors and "
+                        f"{len(vals)} values over {n} rows)"
+                    )
+                X = vals.reshape(n, width)
                 X64 = X.astype(np.float64)
                 out = np.empty((n, n_cand), dtype=np.float64)
                 for ci, (off, cv) in enumerate(flat):
@@ -701,7 +711,7 @@ def _ivfpq_build_tables(
         CASE (the positional tie-break)."""
         n = len(vecs)
         withd = _raw_d2(
-            df, [[(0, v) for v in vecs]], "c_vec", float_arith
+            df, [[(0, v) for v in vecs]], "c_vec", dim, float_arith
         ).selectExpr(
             "*",
             *[f"round(__draw[{k}], {d2_round}) AS __d{k}" for k in range(n)],
@@ -777,7 +787,7 @@ def _ivfpq_build_tables(
         groups = [
             [(j * sub, w) for w in cb_by_j[j]] for j in range(m)
         ]
-        withd = _raw_d2(df, groups, "r_vec", float_arith=False)
+        withd = _raw_d2(df, groups, "r_vec", dim, float_arith=False)
         offs = [0]
         for j in range(m):
             offs.append(offs[-1] + len(cb_by_j[j]))

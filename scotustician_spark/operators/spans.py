@@ -43,17 +43,15 @@ def duplicate_spans(
     text_col: str,
     k: int = 8,
     min_occurrences: int = 2,
-    broadcast_hot: bool = True,
 ) -> DataFrame:
     """Maximal duplicated token spans per document.
 
     Returns (doc_id, span_start, span_end, span_len, n_shingles) with
     token-index [span_start, span_end) bounds. ``min_occurrences``
     counts GLOBAL occurrences of a window (cross- and within-document
-    repeats both qualify, as in ExactSubstr). ``broadcast_hot``:
-    the duplicated-fingerprint set is usually tiny relative to the
-    corpus — set False on heavily-templated corpora and the semi-join
-    becomes a shuffle join AQE can still demote back to broadcast.
+    repeats both qualify, as in ExactSubstr). The duplicated-
+    fingerprint set joins broadcast: it is usually tiny relative to
+    the corpus.
     """
     toks = tokens(F.lower(F.col(text_col)))
     sh_arr = F.when(
@@ -78,7 +76,7 @@ def duplicate_spans(
         .filter(F.col("occ") >= min_occurrences)
         .select("fp")
     )
-    dup = sh.join(F.broadcast(hot) if broadcast_hot else hot, "fp", "left_semi")
+    dup = sh.join(F.broadcast(hot), "fp", "left_semi")
     w = W.partitionBy("doc_id").orderBy("start")
     new_island = F.when(
         F.lag("start").over(w).isNull()

@@ -61,21 +61,15 @@ _FEAT_COLS = ", ".join(
            {_FEAT_COLS}
     FROM documents
     """,
-    doc="Multimodal feature extraction plumbing: opaque binary column → "
-    "Arrow-batched mapInPandas (decoder-per-partition pattern, C4/M4); "
-    "decode stubbed with a deterministic md5-derived feature vector so "
-    "the full distributed path is oracle-verifiable.",
+    doc="Multimodal feature extraction: opaque binary column → feature "
+    "vector; decode stubbed with a deterministic md5-derived feature "
+    "vector, computed as Catalyst expressions, so the full distributed "
+    "path is oracle-verifiable.",
     bench=True,
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fake_sql arm (r11): the deterministic md5 stand-in is Catalyst-
-    # expressible, so the bench query computes it with zero Python in
-    # the plan (bit-identical — pinned by
-    # test_fake_sql_arm_bit_identical_to_fake); the mapInPandas
-    # plumbing stays on the real-decode arms and multimodal_frames
     feats = MM.extract_media_features(
-        _docs_binary(spark, sf_dir), "content", "doc_id", n_dims=_N_DIMS,
-        mode="fake_sql",
+        _docs_binary(spark, sf_dir), "content", "doc_id", n_dims=_N_DIMS
     )
     return feats.select(
         "id",

@@ -26,16 +26,22 @@ def host_defaults() -> tuple[int, str]:
     ``SPARK_GRAFT_DRIVER_MEM`` override either value. Read at call
     time, so a process that sets them after import still gets them.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if cpus is None:
+    env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if env_cpus is None:
         try:
             cpus = len(os.sched_getaffinity(0))
         except AttributeError:  # not Linux
             cpus = os.cpu_count() or 1
+    else:
+        cpus = int(env_cpus) if env_cpus.strip().isdigit() else 0
+        if cpus < 1:
+            raise ValueError(
+                f"SPARK_GRAFT_CPUS must be a positive integer, got {env_cpus!r}"
+            )
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if mem is None:
         mem = f"{min(24 * 1024, max(1024, _mem_total_mb() // 2))}m"
-    return int(cpus), mem
+    return cpus, mem
 
 
 def _mem_total_mb() -> int:

@@ -65,10 +65,8 @@ def stream_static_enrich(
     stream: DataFrame,
     dim: DataFrame,
     on: str,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Left join of a stream against a static dimension (re-evaluated
-    every micro-batch). Broadcast by default: a small dimension must
-    never force the stream through a shuffle."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return stream.join(d, on, "left")
+    every micro-batch). The dimension is broadcast: a small dimension
+    must never force the stream through a shuffle."""
+    return stream.join(F.broadcast(dim), on, "left")

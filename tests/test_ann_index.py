@@ -755,3 +755,23 @@ def test_compact_build_crash_window_rebuilds(spark):
     )
     assert after == before
     assert ANN.read_tombstones(spark, path).count() == 0
+
+
+@pytest.mark.parametrize("bad", ["null", "short"])
+def test_build_rejects_null_or_ragged_vectors(spark, corpus, bad):
+    """One NULL or short embedding must fail the build: the numpy
+    kernel flattens a whole batch, so a missing row would misalign
+    every later row's values instead of failing."""
+    from scotustician_spark.operators.similarity import ivfpq_build
+
+    bad_vec = (
+        F.lit(None).cast("array<double>")
+        if bad == "null"
+        else F.slice(F.col("embedding"), 1, DIM - 1)
+    )
+    bad_corpus = corpus.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == 50, bad_vec).otherwise(F.col("embedding")),
+    )
+    with pytest.raises(Exception, match=f"every vector must hold {DIM} values"):
+        ivfpq_build(bad_corpus, DIM, n_cells=4, m=4, n_codes=4)

@@ -663,28 +663,38 @@ def test_gif_parse_failures_always_valueerror():
 
 
 def test_fake_sql_arm_bit_identical_to_fake(spark, bdf):
-    """extract_media_features(mode='fake_sql') — the zero-Python
-    Catalyst twin of the md5 stand-in arm — must be BIT-identical to
-    the mapInPandas fake arm on every column (the r10 hash_sql
-    discipline: the optimization is only sanctioned because the arms
-    are provably the same function)."""
-    fake = extract_media_features(bdf, "content", "doc_id", n_dims=8).collect()
-    sql = extract_media_features(
-        bdf, "content", "doc_id", n_dims=8, mode="fake_sql"
-    ).collect()
-    by_id_f = {r["id"]: r for r in fake}
-    by_id_s = {r["id"]: r for r in sql}
-    assert set(by_id_f) == set(by_id_s) == {1, 2, 3}
-    for i in by_id_f:
-        rf, rs = by_id_f[i], by_id_s[i]
-        assert rf["n_bytes"] == rs["n_bytes"]
-        assert rf["content_md5"] == rs["content_md5"]
-        # doubles compared by exact bit pattern
-        import struct as _s
+    """extract_media_features(mode='fake') runs the md5 stand-in as
+    Catalyst expressions; it must be BIT-identical on every column to
+    the Python stand-in (``_fake_features``) applied in the driver to
+    the same bytes (the r10 hash_sql discipline: the expression form
+    is only sanctioned because it is provably the same function)."""
+    import struct as _s
 
-        assert [_s.pack("<d", v) for v in rf["features"]] == [
-            _s.pack("<d", v) for v in rs["features"]
+    from scotustician_spark.operators.multimodal import _fake_features
+
+    out = extract_media_features(bdf, "content", "doc_id", n_dims=8)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
+    got = {r["id"]: r for r in out.collect()}
+    rows = {r["doc_id"]: bytes(r["content"]) for r in bdf.collect()}
+    assert set(got) == set(rows) == {1, 2, 3}
+    for i, content in rows.items():
+        assert got[i]["n_bytes"] == len(content)
+        assert got[i]["content_md5"] == hashlib.md5(content).hexdigest()
+        # doubles compared by exact bit pattern
+        assert [_s.pack("<d", v) for v in got[i]["features"]] == [
+            _s.pack("<d", v) for v in _fake_features(content, 8)
         ]
+
+
+def test_fake_mode_rejects_dims_past_the_md5_digest(bdf):
+    """The stand-in has 32 hex digits; a wider request must fail
+    loudly instead of padding with 0.0 features."""
+    with pytest.raises(ValueError, match="n_dims"):
+        extract_media_features(bdf, n_dims=33)
+    with pytest.raises(ValueError, match="n_dims"):
+        extract_media_features(bdf, n_dims=0)
+    assert len(extract_media_features(bdf, n_dims=32).first()["features"]) == 32
 
 
 def test_image_dhash_fake_mode_zero_python_and_identical(spark, bdf):

@@ -9,6 +9,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from scotustician_spark.operators.quality import (
+    EVAL_COLLECT_CHAR_CAP,
     contamination_pairs,
     pii_redact,
     repetition_stats,
@@ -74,17 +75,19 @@ def test_contamination_pairs_and_broadcast_plan(spark):
     eval_set = spark.createDataFrame(
         [(100, "zzz one two three four five")], "doc_id long, text string"
     )
-    for kernel in ("pandas", "expr"):
+    # the default cap takes the Arrow kernel; a zero cap forces the
+    # broadcast-join arm
+    for arm, cap in (("kernel", EVAL_COLLECT_CHAR_CAP), ("join", 0)):
         out = contamination_pairs(
-            corpus, eval_set, "doc_id", "text", n=5, kernel=kernel
+            corpus, eval_set, "doc_id", "text", n=5, max_collect_chars=cap
         )
         rows = {r["doc_id"]: r for r in out.collect()}
-        assert rows[1]["is_contaminated"] and rows[1]["n_contaminated"] == 1, kernel
-        assert not rows[2]["is_contaminated"] and rows[2]["n_contaminated"] == 0, kernel
+        assert rows[1]["is_contaminated"] and rows[1]["n_contaminated"] == 1, arm
+        assert not rows[2]["is_contaminated"] and rows[2]["n_contaminated"] == 0, arm
         plan = out._jdf.queryExecution().executedPlan().toString()
-        # neither kernel ever shuffles corpus data for the eval probe
-        assert "SortMergeJoin" not in plan, kernel
-        if kernel == "expr":
+        # neither arm ever shuffles corpus data for the eval probe
+        assert "SortMergeJoin" not in plan, arm
+        if arm == "join":
             # eval shingle set arrives as one broadcast row,
             # intersected in-row
             assert "BroadcastNestedLoopJoin" in plan
@@ -96,7 +99,7 @@ def test_contamination_pairs_and_broadcast_plan(spark):
 
 def test_contamination_large_eval_set_gates_to_join_path(spark):
     """An eval set above the collect cap must route through the
-    broadcast-join (expr) formulation — no driver-side text collect —
+    broadcast-join formulation — no driver-side text collect —
     and still produce the identical per-doc verdicts (regression for
     the unbounded eval_set.collect())."""
     corpus = spark.createDataFrame(
@@ -114,18 +117,17 @@ def test_contamination_large_eval_set_gates_to_join_path(spark):
         ),
     )
     gated = contamination_pairs(
-        corpus, eval_set, "doc_id", "text", n=5, kernel="pandas",
-        max_collect_chars=10,
+        corpus, eval_set, "doc_id", "text", n=5, max_collect_chars=10
     )
     plan = gated._jdf.queryExecution().executedPlan().toString()
-    # proof the gate fired: the expr path's broadcast row join, and no
-    # Arrow kernel (the pandas path's signature node)
+    # proof the gate fired: the join arm's broadcast row join, and no
+    # Arrow kernel (the kernel arm's signature node)
     assert "BroadcastNestedLoopJoin" in plan
     assert "ArrowEvalPython" not in plan
     want = {
         r["doc_id"]: r
         for r in contamination_pairs(
-            corpus, eval_set, "doc_id", "text", n=5, kernel="expr"
+            corpus, eval_set, "doc_id", "text", n=5, max_collect_chars=0
         ).collect()
     }
     got = {r["doc_id"]: r for r in gated.collect()}

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from scotustician_spark import session
 
 
@@ -32,6 +34,13 @@ def test_env_overrides_host_defaults(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     assert session.host_defaults() == (3, "2g")
+
+
+@pytest.mark.parametrize("bad", ["0", "-2", "four", "", "2.5"])
+def test_bad_cpu_override_is_rejected(monkeypatch, bad):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session.host_defaults()
 
 
 def test_repartition_for_compute_reads_cpus_at_call_time(spark, monkeypatch):
