@@ -35,13 +35,20 @@ index returns bit-identical results to probing the in-memory build
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .similarity import ivfpq_build, ivfpq_probe, rank_topk
-from ..functions.vector import cosine_similarity
+from .similarity import (
+    _d2r,
+    _pq_subvecs,
+    exact_rerank,
+    ivfflat_probe,
+    ivfpq_build,
+    ivfpq_probe,
+    lloyd_assignments,
+)
 
 
 @dataclass
@@ -59,6 +66,24 @@ class IvfPqIndex:
     codes: DataFrame      # (cid, cell, j, code)
     vectors: DataFrame    # (cid, c_vec)
     params: dict
+    # (centroid rows, codebook rows), collected by the first probe
+    _quantizer: tuple | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
+
+    def quantizer_rows(self) -> tuple[list, list]:
+        """The parameter-bounded quantizer tables as sorted local rows
+        — [(cell, centroid)] and [(j, code, cw)] — collected once per
+        handle: the serving reality (FAISS keeps them in RAM)."""
+        if self._quantizer is None:
+            self._quantizer = (
+                sorted((int(r[0]), list(r[1])) for r in self.centroids.collect()),
+                sorted(
+                    (int(r[0]), int(r[1]), list(r[2]))
+                    for r in self.codebooks.collect()
+                ),
+            )
+        return self._quantizer
 
 
 def build_ivfpq_index(
@@ -198,13 +223,11 @@ def append_to_ivfpq_index(
 
     # nearest existing cell per delta vector (struct-min argmin — same
     # rounding/tie-break discipline as the build; the distance is the
-    # SHARED _sq_l2 kernel so the appended-equals-direct-encoding
+    # SHARED _d2r kernel so the appended-equals-direct-encoding
     # parity can never drift from a one-sided edit)
-    from .similarity import _sq_l2
-
     assigned = (
         d.crossJoin(F.broadcast(index.centroids))
-        .withColumn("d2r", F.round(_sq_l2("c_vec", "centroid"), d2r))
+        .withColumn("d2r", _d2r("c_vec", "centroid", d2r))
         .groupBy("cid")
         .agg(F.min(F.struct("d2r", "cell", "c_vec")).alias("__m"))
         .select(
@@ -218,12 +241,10 @@ def append_to_ivfpq_index(
         "cell",
         F.zip_with("c_vec", "centroid", lambda x, ce: x - ce).alias("r_vec"),
     )
-    from .similarity import _pq_d2, _pq_subvecs
-
     rsub = _pq_subvecs(resid, ["cid", "cell"], "r_vec", m, sub)
     new_codes = (
         rsub.join(F.broadcast(index.codebooks), "j")
-        .withColumn("d2c", _pq_d2("sv", "cw", d2r))
+        .withColumn("d2c", _d2r("sv", "cw", d2r))
         .groupBy("cid", "cell", "j")
         .agg(F.min(F.struct("d2c", "code")).alias("__m"))
         .select("cid", "cell", "j", F.col("__m.code").alias("code"))
@@ -266,10 +287,8 @@ def build_ivfflat_index(
     form, labeled by cell (the inverted-list key). Same deterministic
     quantizer as the IVFPQ build, so the same SQL oracle family
     replays it."""
-    from .similarity import onestep_cell_assignments
-
     c = corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("c_vec"))
-    assigned, cents = onestep_cell_assignments(c, n_cells, d2_round)
+    assigned, cents = lloyd_assignments(c, n_cells, 1, d2_round)
     return IvfFlatIndex(
         centroids=cents,
         vectors=assigned.select("cid", "cell", "c_vec"),
@@ -348,35 +367,15 @@ def probe_ivfflat_index(
     sim_round: int = 6,
 ) -> DataFrame:
     """Exact cosine top-k inside each query's ``n_probe`` nearest
-    cells: broadcast centroids pick the cells, the vectors scan
-    partition-prunes to those lists, candidates re-rank exactly.
-    Identical results to ``similarity.ivf_topk_onestep`` (the oracle
-    anchor) minus the per-call quantizer build."""
-    from pyspark.sql.window import Window as W
-
-    from .similarity import _sq_l2, rank_topk
-    from ..functions.vector import cosine_similarity
-
-    d2r = index.params["d2_round"]
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    wp = W.partitionBy("query_id").orderBy(F.asc("d2r"), F.asc("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(index.centroids))
-        .withColumn("d2r", F.round(_sq_l2("q_vec", "centroid"), d2r))
-        .withColumn("p_rnk", F.row_number().over(wp))
-        .filter(F.col("p_rnk") <= n_probe)
-        .select("query_id", "q_vec", "cell")
+    cells: ``similarity.ivfflat_probe`` over the index, so the vectors
+    scan partition-prunes to the probed lists. Identical results to
+    ``similarity.ivf_topk_onestep`` (the oracle anchor) minus the
+    per-call quantizer build."""
+    inverted = index.vectors.select(F.col("cid").alias("neighbor_id"), "cell", "c_vec")
+    return ivfflat_probe(
+        index.centroids, inverted, queries, id_col, vec_col, k, n_probe,
+        index.params["d2_round"], sim_round,
     )
-    scored = (
-        index.vectors.select(F.col("cid").alias("neighbor_id"), "cell", "c_vec")
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "sim", F.round(cosine_similarity("q_vec", "c_vec"), sim_round)
-        )
-        .select("query_id", "neighbor_id", "sim")
-    )
-    return rank_topk(scored, k)
 
 
 # ---- deletes: tombstones + compaction ------------------------------
@@ -732,30 +731,12 @@ def probe_ivfpq_index(
 
     The parameter-bounded quantizer tables (n_cells centroids,
     m×n_codes codewords) collect once per opened index and cache on
-    the handle — the serving reality (FAISS keeps them in RAM), and
-    the same open-once discipline as the r9 open-memoization."""
+    the handle (``IvfPqIndex.quantizer_rows``)."""
     p = index.params
-    if getattr(index, "_cents_rows", None) is None:
-        index._cents_rows = sorted(
-            (int(r[0]), list(r[1])) for r in index.centroids.collect()
-        )
-        index._cb_rows = sorted(
-            (int(r[0]), int(r[1]), list(r[2])) for r in index.codebooks.collect()
-        )
+    cents_rows, cb_rows = index.quantizer_rows()
     return ivfpq_probe(
-        index.centroids,
-        index.codebooks,
-        index.codes,
-        queries,
-        p["dim"],
-        id_col,
-        vec_col,
-        k,
-        n_probe,
-        p["m"],
-        p["d2_round"],
-        _cents_rows=index._cents_rows,
-        _cb_rows=index._cb_rows,
+        cents_rows, cb_rows, index.codes, queries, p["dim"], id_col, vec_col,
+        k, n_probe, p["m"], p["d2_round"],
     )
 
 
@@ -779,15 +760,4 @@ def rerank_from_index(
         index, queries, id_col, vec_col, k=n_candidates, n_probe=n_probe
     ).select("query_id", "neighbor_id")
     c = index.vectors.select(F.col("cid").alias("neighbor_id"), "c_vec")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    scored = (
-        cands.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "sim", F.round(cosine_similarity("q_vec", "c_vec"), sim_round)
-        )
-        .select("query_id", "neighbor_id", "sim")
-    )
-    return rank_topk(scored, k)
+    return exact_rerank(cands, c, queries, id_col, vec_col, k, sim_round)

@@ -1,29 +1,42 @@
 """Similarity search over embedding columns (``array<float>``).
 
 The reference's vector search is pgvector cosine top-k over case
-embeddings (clustering/helpers.py:185-226, W2 in SURVEY §2.6). Here:
+embeddings (clustering/helpers.py:185-226, W2 in SURVEY §2.6). Each
+search step is one function here, shared by every family that runs it:
+``score_queries`` scores, ``rank_topk`` ranks (sim desc, id asc),
+``_adc_topk`` ranks by asymmetric distance, ``_sq_l2`` is the
+squared-L2 fold and ``lloyd_assignments`` the deterministic
+quantizer. The families:
 
 - ``brute_force_topk`` — exact cosine top-k: broadcast the (small)
-  query set against the corpus scan, dot products as Catalyst HOFs,
-  per-query top-k via window. One pass over the corpus, no shuffle of
-  the corpus itself — the right baseline up to ~thousands of queries.
-- ``lsh_bucket_topk`` — the scale path: deterministic random-hyperplane
-  (SimHash-for-vectors) bucketing; only same-bucket pairs are scored.
-  Probing multiple hyperplane sets trades recall for cost.
-- ``pairwise_cosine_longform`` — all-pairs cosine via dimension-
-  exploded equi-join (the SQL-oracle-friendly formulation; also the
-  sparse-vector-friendly one).
+  query set against one corpus scan. ``incremental_topk`` maintains
+  the same top-k under corpus inserts.
+- ``lsh_bucket_topk`` — deterministic random-hyperplane bucketing
+  (``lsh_bucket_relation``); only same-bucket pairs are scored.
+- ``ivf_topk_onestep`` — IVF-flat: a Lloyd quantizer, then
+  ``ivfflat_probe`` (nearest cells, exact scoring inside them).
+  ``ivf_topk`` is the MLlib-KMeans-quantizer arm.
+- ``pq_topk_onestep`` — product quantization, asymmetric distances.
+- ``ivfpq_topk_onestep`` — IVF + residual PQ: ``ivfpq_build`` then
+  ``ivfpq_probe``; ``ann_rerank_topk`` re-ranks its candidates with
+  ``exact_rerank``. ``operators/ann_index.py`` persists the same
+  index and serves it through the same probe and re-rank.
+- ``semantic_dedup_cells`` — in-cell cosine dedup over the quantizer.
+- ``pairwise_cosine_blocked`` — all-pairs cosine ≥ threshold by
+  block matrix multiply.
+- ``mmr_diversify`` — maximal-marginal-relevance result pages.
 """
 
 from __future__ import annotations
 
 import math
+import weakref
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..functions.vector import cosine_similarity, l2_norm
+from ..functions.vector import cosine_similarity
 
 
 def brute_force_topk(
@@ -39,48 +52,8 @@ def brute_force_topk(
     Ranking uses row_number over (query, -sim) with id tie-break so
     results are deterministic.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cosine_similarity("q_vec", "c_vec"))
-        .select("query_id", "neighbor_id", "sim")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-    )
+    return rank_topk(score_queries(queries, corpus, id_col, vec_col, None), k)
 
-
-def hyperplane_bucket(vec_col: str, dim: int, n_planes: int = 8, seed: int = 42) -> F.Column:
-    """Deterministic random-hyperplane LSH bucket id for a vector column.
-
-    Hyperplanes are seeded sinusoids (no RNG state needed on executors;
-    every task regenerates identical planes — this is what makes the
-    operator resumable and oracle-checkable). sign(v · h_p) gives bit p.
-    """
-    bits = []
-    for p in range(n_planes):
-        # h_p[i] = sin(seed + p*dim + i) — fixed, full-rank-ish directions
-        plane = F.array(
-            *[F.lit(math.sin(seed + p * dim + i)) for i in range(dim)]
-        )
-        proj = F.aggregate(
-            F.zip_with(F.col(vec_col), plane, lambda x, h: x * h),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)) * (2**p))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.alias("bucket")
-
-
-import weakref
 
 # session -> {(dim, n_planes, seed): relation}; weak keys drop a
 # stopped session's entries (the tables._CACHE discipline — id()-keyed
@@ -200,20 +173,35 @@ def lsh_bucket_topk(
         .withColumn("sim", sim)
         .select("query_id", "neighbor_id", "sim")
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-    )
+    return rank_topk(scored, k)
 
 
-def _sq_l2(v: str, ccol: str) -> F.Column:
-    """Squared L2 distance between two array columns as a Catalyst HOF."""
+def _sq_l2(a: Column | str, b: Column | str) -> Column:
+    """Squared L2 distance between two array columns as a Catalyst HOF:
+    element differences squared in the arrays' own type, folded left
+    into a double from 0.0. The oracles replay exactly this arithmetic,
+    so it is not ``functions.vector.l2_distance``, which widens to
+    double first."""
     return F.aggregate(
-        F.zip_with(F.col(v), F.col(ccol), lambda x, y: (x - y) * (x - y)),
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, d: acc + d,
     )
+
+
+def _d2r(a: Column | str, b: Column | str, d2_round: int) -> Column:
+    """``_sq_l2`` rounded to ``d2_round``: the engine-stable ``d2r``
+    that every quantizer argmin, probe-cell choice and ADC lookup
+    ranks by."""
+    return F.round(_sq_l2(a, b), d2_round)
+
+
+def _pq_sub(dim: int, m: int) -> int:
+    """Subspace width ``dim // m``; raises unless ``m`` divides ``dim``
+    (a remainder would silently drop the trailing dimensions)."""
+    if m <= 0 or dim % m:
+        raise ValueError(f"dim={dim} must divide evenly into m={m} subspaces")
+    return dim // m
 
 
 def lloyd_assignments(
@@ -230,8 +218,8 @@ def lloyd_assignments(
     round to ``d2_round`` BEFORE every argmin; ties break by cell
     asc; centroid means are per-(cell, pos) avgs) — the same rounding
     discipline proven for the IVFPQ build, extended from the one-step
-    refinement to a converged k-means. ``n_iters=1`` is exactly the
-    historical ``onestep_cell_assignments``.
+    refinement to a converged k-means. ``n_iters=1`` is the one-step
+    refinement shared by IVF-flat search and semantic dedup.
 
     Scale shape: each round is one broadcast of the |n_cells| centroid
     table + one map-side-combined partial aggregation over the corpus
@@ -257,7 +245,7 @@ def lloyd_assignments(
         # formulation shuffled and sorted all of it
         return (
             vecs.crossJoin(F.broadcast(cents))
-            .withColumn("d2r", F.round(_sq_l2("c_vec", "centroid"), d2_round))
+            .withColumn("d2r", _d2r("c_vec", "centroid", d2_round))
             .groupBy("cid")
             .agg(F.min(F.struct("d2r", "cell", "c_vec")).alias("__m"))
             .select("cid", F.col("__m.c_vec").alias("c_vec"), F.col("__m.cell").alias("cell"))
@@ -279,14 +267,6 @@ def lloyd_assignments(
         if n_iters > 1:  # keep multi-round plans flat; tiny relation
             cents = cents.localCheckpoint(eager=True)
     return _assign(c, cents), cents
-
-
-def onestep_cell_assignments(
-    c: DataFrame, n_cells: int, d2_round: int = 6
-) -> tuple[DataFrame, DataFrame]:
-    """Historical name for ``lloyd_assignments(..., n_iters=1)`` —
-    the one-step refinement shared by IVF search and semantic dedup."""
-    return lloyd_assignments(c, n_cells, 1, d2_round)
 
 
 def semantic_dedup_cells(
@@ -318,7 +298,7 @@ def semantic_dedup_cells(
     # and the final cell join-back) — materialize once so the two-pass
     # Lloyd assignment isn't re-evaluated per consumer (same lineage-cut
     # discipline as triangle_counts / the components loop)
-    assigned, _ = onestep_cell_assignments(c, n_cells, d2_round)
+    assigned, _ = lloyd_assignments(c, n_cells, 1, d2_round)
     assigned = assigned.localCheckpoint(eager=True)
     # in-cell pairs only: the equi-join on cell bounds the explosion
     a = assigned.select(
@@ -357,38 +337,53 @@ def ivf_topk_onestep(
     sim_round: int = 6,
     n_iters: int = 1,
 ) -> DataFrame:
-    """IVF top-k with a DETERMINISTIC one-step-Lloyd coarse quantizer
-    (cell assignment shared with ``semantic_dedup_cells`` via
-    ``onestep_cell_assignments``) —
+    """IVF top-k with a DETERMINISTIC Lloyd coarse quantizer
+    (``lloyd_assignments``, shared with ``semantic_dedup_cells``) —
     the oracle-checkable sibling of ``ivf_topk`` (whose MLlib KMeans
-    quantizer is iterative and engine-specific).
+    quantizer is iterative and engine-specific). Build, then probe:
+    the quantizer labels every corpus vector with its cell, then
+    ``ivfflat_probe`` — the same probe the persisted IVF-flat index
+    serves — scores each query's ``n_probe`` nearest cells exactly.
 
     Seeds are the vectors with the ``n_cells`` smallest ids; one Lloyd
     refinement (assign to nearest seed, re-center as the element-wise
     cell mean) gives data-adapted centroids that any SQL engine can
-    reproduce. Distances and similarities are rounded BEFORE ranking
-    (ties break by cell / id asc) so the argmin is stable across
-    engines despite last-ulp float-summation differences.
-
-    Same physical shape as ``ivf_topk``: the centroid table is tiny and
-    broadcast everywhere; corpus passes are map-side (assignment) plus
-    one equi-join on cell id for the probe — candidates scale with
-    inverted-list sizes, never corpus².
-
-    ``n_iters`` > 1 runs the quantizer to a deeper Lloyd convergence
-    (``lloyd_assignments``) — the deterministic, oracle-replayable
-    equivalent of a learned k-means quantizer.
+    reproduce. ``n_iters`` > 1 runs the quantizer to a deeper Lloyd
+    convergence — the deterministic, oracle-replayable equivalent of a
+    learned k-means quantizer.
     """
     c = corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("c_vec"))
-    assigned, cents1 = lloyd_assignments(c, n_cells, n_iters, d2_round)
-    inverted = assigned.select(
-        F.col("cid").alias("neighbor_id"), "c_vec", "cell"
+    assigned, cents = lloyd_assignments(c, n_cells, n_iters, d2_round)
+    inverted = assigned.select(F.col("cid").alias("neighbor_id"), "c_vec", "cell")
+    return ivfflat_probe(
+        cents, inverted, queries, id_col, vec_col, k, n_probe, d2_round, sim_round
     )
+
+
+def ivfflat_probe(
+    centroids: DataFrame,
+    inverted: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    n_probe: int,
+    d2_round: int,
+    sim_round: int,
+) -> DataFrame:
+    """The IVF-flat probe: each query's ``n_probe`` nearest cells by
+    rounded squared L2 (ties by cell asc), then exact rounded cosine
+    inside those cells, ranked by ``rank_topk``. ``centroids`` is
+    (cell, centroid); ``inverted`` is the cell-labelled corpus
+    (neighbor_id, cell, c_vec). Centroids and the per-query probe
+    rows broadcast; the inverted lists join on cell (a persisted,
+    cell-partitioned list prunes to the probed cells) — candidates
+    scale with list sizes, never corpus²."""
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     wp = W.partitionBy("query_id").orderBy(F.asc("d2r"), F.asc("cell"))
     probes = (
-        q.crossJoin(F.broadcast(cents1))
-        .withColumn("d2r", F.round(_sq_l2("q_vec", "centroid"), d2_round))
+        q.crossJoin(F.broadcast(centroids))
+        .withColumn("d2r", _d2r("q_vec", "centroid", d2_round))
         .withColumn("p_rnk", F.row_number().over(wp))
         .filter(F.col("p_rnk") <= n_probe)
         .select("query_id", "q_vec", "cell")
@@ -399,10 +394,7 @@ def ivf_topk_onestep(
         .withColumn("sim", F.round(cosine_similarity("q_vec", "c_vec"), sim_round))
         .select("query_id", "neighbor_id", "sim")
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w).cast("bigint")).filter(
-        F.col("rnk") <= k
-    )
+    return rank_topk(scored, k)
 
 
 def pq_topk_onestep(
@@ -439,41 +431,17 @@ def pq_topk_onestep(
     top-k. Compose with an exact re-rank of the top candidates when
     recall matters.
     """
-    sub = dim // m
-    assert sub * m == dim, "dim must divide evenly into m subspaces"
+    sub = _pq_sub(dim, m)
 
     def _subvecs(df: DataFrame, id_alias: str) -> DataFrame:
-        parts = F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    F.slice(F.col(vec_col), j * sub + 1, sub)
-                    .cast("array<double>")
-                    .alias("sv"),
-                )
-                for j in range(m)
-            ]
-        )
-        return df.select(
-            F.col(id_col).alias(id_alias), F.explode(parts).alias("s")
-        ).select(id_alias, F.col("s.j").alias("j"), F.col("s.sv").alias("sv"))
-
-    def _d2(a: str, b: str) -> F.Column:
-        return F.round(
-            F.aggregate(
-                F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ),
-            d2_round,
-        )
+        return _pq_subvecs(df, [F.col(id_col).alias(id_alias)], vec_col, m, sub)
 
     def _assign(sv: DataFrame, id_alias: str, cb: DataFrame) -> DataFrame:
-        # struct-min argmin (see onestep_cell_assignments): hash agg
-        # with map-side partials instead of a sort window
+        # struct-min argmin (see lloyd_assignments): hash agg with
+        # map-side partials instead of a sort window
         return (
             sv.join(F.broadcast(cb), "j")
-            .withColumn("d2r", _d2("sv", "cw"))
+            .withColumn("d2r", _d2r("sv", "cw", d2_round))
             .groupBy(id_alias, "j")
             .agg(F.min(F.struct("d2r", "code", "sv")).alias("__m"))
             .select(
@@ -512,26 +480,17 @@ def pq_topk_onestep(
     lut = (
         _subvecs(queries, "query_id")
         .join(F.broadcast(cb1), "j")
-        .select("query_id", "j", "code", _d2("sv", "cw").alias("lut_d2"))
+        .select("query_id", "j", "code", _d2r("sv", "cw", d2_round).alias("lut_d2"))
     )
-    approx = (
-        codes.join(F.broadcast(lut), ["j", "code"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        # only m addends: rounding the sum removes engine-order ulps
-        .agg(F.round(F.sum("lut_d2"), d2_round).alias("approx_d2"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("approx_d2"), F.asc("neighbor_id"))
-    return approx.withColumn("rnk", F.row_number().over(w).cast("bigint")).filter(
-        F.col("rnk") <= k
-    )
+    return _adc_topk(codes, lut, ["j", "code"], k, d2_round)
 
 
 def _pq_subvecs(
-    df: DataFrame, id_cols: list[str], vcol: str, m: int, sub: int
+    df: DataFrame, id_cols: list[Column | str], vcol: str, m: int, sub: int
 ) -> DataFrame:
     """Explode an array column into its ``m`` subspace slices:
-    one row per (ids…, j, sv) with sv = dims [j*sub, (j+1)*sub)."""
+    one row per (ids…, j, sv) with sv = dims [j*sub, (j+1)*sub).
+    ``id_cols`` are column names or (aliased) Columns of ``df``."""
     parts = F.array(
         *[
             F.struct(
@@ -543,33 +502,31 @@ def _pq_subvecs(
             for j in range(m)
         ]
     )
-    return df.select(*id_cols, F.explode(parts).alias("s")).select(
-        *id_cols, F.col("s.j").alias("j"), F.col("s.sv").alias("sv")
+    exploded = df.select(*id_cols, F.explode(parts).alias("s"))
+    return exploded.select(
+        *exploded.columns[:-1], F.col("s.j").alias("j"), F.col("s.sv").alias("sv")
     )
 
 
-def _pq_d2(a: str, b: str, d2_round: int) -> F.Column:
-    return F.round(
-        F.aggregate(
-            F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        ),
-        d2_round,
+def _adc_topk(
+    codes: DataFrame, lut: DataFrame, keys: list[str], k: int, d2_round: int
+) -> DataFrame:
+    """Asymmetric-distance top-k, shared by PQ and IVFPQ: ``codes``
+    (neighbor_id, keys…) joins the broadcast per-query lookup table
+    ``lut`` (query_id, keys…, lut_d2) on ``keys``, each candidate's
+    distance is the sum of its m entries, ranked (approx_d2 asc,
+    neighbor_id asc)."""
+    approx = (
+        codes.join(F.broadcast(lut), keys)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .groupBy("query_id", "neighbor_id")
+        # only m addends: rounding the sum removes engine-order ulps
+        .agg(F.round(F.sum("lut_d2"), d2_round).alias("approx_d2"))
     )
-
-
-def _one_row_relation(spark, cols: dict[str, tuple[object, str]]) -> DataFrame:
-    """One-row broadcast-able relation of named (value, ddl-type) pairs,
-    built Arrow-native (session.local_relation) — the hyperplane-table
-    pattern: constants ride as a broadcast column reference instead of
-    hundreds of literal nodes (plan analysis stays O(1) in table size)
-    and instead of a pickled-Python-RDD scan (no Python workers)."""
-    from ..session import local_relation
-
-    names = list(cols)
-    schema = ", ".join(f"{n} {cols[n][1]}" for n in names)
-    return local_relation(spark, [tuple(cols[n][0] for n in names)], schema)
+    w = W.partitionBy("query_id").orderBy(F.asc("approx_d2"), F.asc("neighbor_id"))
+    return approx.withColumn("rnk", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rnk") <= k
+    )
 
 
 def _ivfpq_build_tables(
@@ -583,42 +540,36 @@ def _ivfpq_build_tables(
     d2_round: int,
 ) -> tuple[list, list, DataFrame]:
     """IVFPQ build with the quantizer tables COLLECTED (bounded: n_cells
-    centroids + m\u00d7n_codes codewords — parameter-sized, corpus-size-
-    independent) and every corpus argmin pass UNROLLED into codegen'd
-    scalar expressions over collected literals.
+    centroids + m×n_codes codewords — parameter-sized, corpus-size-
+    independent) and every corpus argmin pass run by a numpy
+    ``mapInArrow`` kernel (``_raw_d2``).
 
-    r10 expressed the argmins as in-row HOFs (transform/zip_with/
-    aggregate over a one-row broadcast array relation). Higher-order
-    functions are CodegenFallback — interpreted per element, with a
-    per-candidate intermediate array allocation — and the r11 stage
-    profile charged the two build passes ~12 s CPU EACH at sf0.1
-    (stages 50/65, 32 tasks, 20k vectors). The quantizer tables are
-    parameter-bounded, so their values can ride as LITERALS: each
-    candidate distance becomes an unrolled left-associative sum of
-    squared differences (WholeStageCodegen compiles it; zero per-row
-    allocation) and each argmin a least() + first-match CASE — the
-    (d2r, index)-ascending tie-break expressed positionally.
+    Four bounded collects run in order: the ``n_cells`` lowest-id seed
+    vectors; the one-step re-centered centroids (seed argmin, then a
+    per-(cell, pos) avg); the PQ seed codebook (residual slices of the
+    ``n_codes`` lowest-id vectors); and the one-step re-centered
+    codebook (per-subspace argmin over all residuals, then avg). The
+    final encoding is a map-only pass over the corpus.
 
-    Numeric equivalence with the HOF formulation is preserved
-    term-by-term: the seed pass keeps FLOAT32 arithmetic per element
-    with each squared term cast to double before the sum (exactly the
-    old zip_with float ops + double fold), the refined/PQ passes are
-    all-double, sums associate left (the old fold's leading 0.0 + t1
-    equals t1 for the non-negative squares), every distance rounds to
-    ``d2_round`` before every argmin, ties break to the lowest
-    cell/code, and literals round-trip exactly (repr(double) through
-    CAST('…' AS DOUBLE/FLOAT)). Verified value-identical to the r10
-    build output at sf0.001/0.01/0.1 (cents/cb/codes compared cell by
-    cell) and oracle-green for the whole ANN family.
+    Each argmin pass hands whole Arrow batches to the kernel, which
+    returns the RAW squared distance to every candidate, accumulated
+    one dim at a time so the sum associates left like the ``_sq_l2``
+    fold: float32 element arithmetic (each squared term widened to
+    double before the add) against the float32 seeds, all-double after.
+    Rounding to ``d2_round`` and the argmin stay in the JVM — a
+    ``least()`` over the rounded distances and a first-match CASE,
+    i.e. the (d2r, index)-ascending tie-break. Residuals subtract the
+    chosen centroid, held as exact double literals (``repr`` through
+    CAST), inside a ``zip_with``. The SQL oracles replay the whole
+    build bit-for-bit.
 
     Returns (cents1 rows [(cell, [double])], cb1 rows [(j, code,
     [double])], codes DataFrame (cid, cell, j, code) — a map-only plan).
     """
-    sub = dim // m
-    assert sub * m == dim, "dim must divide evenly into m subspaces"
+    sub = _pq_sub(dim, m)
     from ..session import repartition_for_compute
 
-    # the unrolled scalar maps are cheap, but a small corpus still
+    # the kernel passes are cheap, but a small corpus still
     # scans as ONE split; widen before compute (no-op at 100 TB)
     c = repartition_for_compute(
         corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("c_vec"))
@@ -743,7 +694,7 @@ def _ivfpq_build_tables(
         ).limit(0)
         return [], [], empty
 
-    # --- ACTION 1: one-step re-center over the unrolled seed argmin
+    # --- ACTION 1: one-step re-center over the seed argmin
     # (seed centroids are raw float32 corpus vectors — FLOAT terms)
     cents1_rows = (
         _assign_k(c, seeds, float_arith=True)
@@ -906,11 +857,11 @@ def ivfpq_build(
     makes the persisted index reproducible: rebuilding from the same
     corpus yields byte-identical tables.
 
-    Plan shape (r10): the quantizer tables are bounded collects and the
-    corpus passes are in-row argmins against one-row broadcast arrays —
-    see ``_ivfpq_build_tables``. The returned centroid/codebook
-    DataFrames are Arrow-native local relations holding exactly the
-    collected values; ``codes`` is a map-only plan over the corpus.
+    Plan shape: the quantizer tables are bounded collects and the
+    corpus argmin passes run in a numpy ``mapInArrow`` kernel — see
+    ``_ivfpq_build_tables``. The returned centroid/codebook DataFrames
+    are Arrow-native local relations holding exactly the collected
+    values; ``codes`` is a map-only plan over the corpus.
     """
     from ..session import local_relation
 
@@ -924,8 +875,8 @@ def ivfpq_build(
 
 
 def ivfpq_probe(
-    centroids: DataFrame,
-    codebooks: DataFrame,
+    cents_rows: list,
+    cb_rows: list,
     codes: DataFrame,
     queries: DataFrame,
     dim: int,
@@ -935,57 +886,42 @@ def ivfpq_probe(
     n_probe: int = 2,
     m: int = 4,
     d2_round: int = 6,
-    _cents_rows: list | None = None,
-    _cb_rows: list | None = None,
 ) -> DataFrame:
     """The PROBE half of IVFPQ: rank each query's candidates in its
     ``n_probe`` nearest cells by asymmetric distance — a per-(query,
     probed cell) lookup table over the residual codebooks, summed per
-    candidate over its m codes. Takes the three index relations from
-    ``ivfpq_build`` (in-memory or read back from a persisted index) —
-    the serving-path cost is therefore |probed lists| × m codes,
-    independent of corpus size, embedding width, and (crucially) of
-    the index BUILD cost, which is paid once, not per query.
+    candidate over its m codes. Takes the collected quantizer rows —
+    ``cents_rows`` [(cell, centroid)] and ``cb_rows`` [(j, code, cw)],
+    as ``_ivfpq_build_tables`` returns them and ``IvfPqIndex`` caches
+    them — and the long-form ``codes`` relation (in-memory or read
+    back from a persisted index). The serving-path cost is therefore
+    |probed lists| × m codes, independent of corpus size, embedding
+    width, and (crucially) of the index BUILD cost, which is paid
+    once, not per query.
 
-    r10 shape: centroids and codebooks are parameter-bounded (n_cells /
-    m×n_codes rows) — collect them once and express the probe-cell
-    selection and the ADC lookup table as IN-ROW expressions over
-    one-row broadcast arrays. The former plan paid a broadcast build +
-    row_number window exchange for the cell choice and a further
-    broadcast join for the LUT; now both are a map over the (tiny)
-    query relation, and the only remaining join is the codes-side ADC
-    equi-join on (cell, j, code) — which keeps its partition-pruning
-    behavior on persisted indexes. Callers that already hold the
-    collected tables pass them via ``_cents_rows`` / ``_cb_rows``.
+    The quantizer rows are parameter-bounded (n_cells / m×n_codes), so
+    they ride as one-row broadcast arrays and the probe-cell selection
+    and the ADC lookup table are IN-ROW expressions — a map over the
+    (tiny) query relation. The only join is the codes-side ADC
+    equi-join on (cell, j, code), which partition-prunes a persisted
+    index's codes to the probed cells.
     """
-    sub = dim // m
-    assert sub * m == dim, "dim must divide evenly into m subspaces"
-    spark = queries.sparkSession
+    from ..session import local_relation
 
-    cents_rows = (
-        _cents_rows
-        if _cents_rows is not None
-        else sorted((int(r[0]), list(r[1])) for r in centroids.collect())
-    )
-    cb_rows = (
-        _cb_rows
-        if _cb_rows is not None
-        else sorted((int(r[0]), int(r[1]), list(r[2])) for r in codebooks.collect())
-    )
+    sub = _pq_sub(dim, m)
     cb_by_j: list[list] = [[] for _ in range(m)]
     for j, code, cw in cb_rows:
         cb_by_j[j].append((code, cw))
-
-    tables_b = _one_row_relation(
-        spark,
-        {
-            "__c1v": ([v for _, v in cents_rows], "array<array<double>>"),
-            "__c1i": ([i for i, _ in cents_rows], "array<int>"),
-            "__cbc": ([[cd for cd, _ in per_j] for per_j in cb_by_j],
-                      "array<array<int>>"),
-            "__cbw": ([[cw for _, cw in per_j] for per_j in cb_by_j],
-                      "array<array<array<double>>>"),
-        },
+    tables_b = local_relation(
+        queries.sparkSession,
+        [(
+            [v for _, v in cents_rows],
+            [i for i, _ in cents_rows],
+            [[cd for cd, _ in per_j] for per_j in cb_by_j],
+            [[cw for _, cw in per_j] for per_j in cb_by_j],
+        )],
+        "__c1v array<array<double>>, __c1i array<int>, "
+        "__cbc array<array<int>>, __cbw array<array<array<double>>>",
     )
 
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
@@ -995,16 +931,7 @@ def ivfpq_probe(
             F.transform(
                 F.col("__c1v"),
                 lambda cv, i: F.struct(
-                    F.round(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("q_vec"), cv, lambda x, y: (x - y) * (x - y)
-                            ),
-                            F.lit(0.0),
-                            lambda acc, d: acc + d,
-                        ),
-                        d2_round,
-                    ).alias("d2r"),
+                    _d2r("q_vec", cv, d2_round).alias("d2r"),
                     F.element_at(F.col("__c1i"), i + 1).alias("cell"),
                     cv.alias("centroid"),
                 ),
@@ -1032,18 +959,11 @@ def ivfpq_probe(
                 lambda code, cw: F.struct(
                     j.alias("j"),
                     code.alias("code"),
-                    F.round(
-                        F.aggregate(
-                            F.zip_with(
-                                F.slice(F.col("qr_vec"), j * sub + 1, sub).cast(
-                                    "array<double>"
-                                ),
-                                cw,
-                                lambda x, y: (x - y) * (x - y),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, d: acc + d,
+                    _d2r(
+                        F.slice(F.col("qr_vec"), j * sub + 1, sub).cast(
+                            "array<double>"
                         ),
+                        cw,
                         d2_round,
                     ).alias("lut_d2"),
                 ),
@@ -1059,17 +979,8 @@ def ivfpq_probe(
         F.col("e.code").alias("code"),
         F.col("e.lut_d2").alias("lut_d2"),
     )
-    approx = (
-        codes.select(F.col("cid").alias("neighbor_id"), "cell", "j", "code")
-        .join(F.broadcast(lut), ["cell", "j", "code"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("lut_d2"), d2_round).alias("approx_d2"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("approx_d2"), F.asc("neighbor_id"))
-    return approx.withColumn("rnk", F.row_number().over(w).cast("bigint")).filter(
-        F.col("rnk") <= k
-    )
+    neighbors = codes.select(F.col("cid").alias("neighbor_id"), "cell", "j", "code")
+    return _adc_topk(neighbors, lut, ["cell", "j", "code"], k, d2_round)
 
 
 def ivfpq_topk_onestep(
@@ -1109,19 +1020,7 @@ def ivfpq_topk_onestep(
         corpus, dim, id_col, vec_col, n_cells, m, n_codes, d2_round
     )
     return ivfpq_probe(
-        None,
-        None,
-        codes,
-        queries,
-        dim,
-        id_col,
-        vec_col,
-        k,
-        n_probe,
-        m,
-        d2_round,
-        _cents_rows=cents1,
-        _cb_rows=cb1,
+        cents1, cb1, codes, queries, dim, id_col, vec_col, k, n_probe, m, d2_round
     )
 
 
@@ -1143,8 +1042,7 @@ def pairwise_cosine_blocked(
     standard block-matmul cost), each group holds two blocks — size
     n_blocks so a block pair fits executor memory; compute is embar-
     rassingly parallel across the n_blocks·(n_blocks+1)/2 groups.
-    ~40× faster than the dimension-exploded join on dense vectors (the
-    longform stays as the sparse/oracle-friendly variant).
+    ~40× faster than a dimension-exploded equi-join on dense vectors.
     """
     import numpy as np
     import pandas as pd
@@ -1197,43 +1095,6 @@ def pairwise_cosine_blocked(
     )
 
 
-def pairwise_cosine_longform(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-) -> DataFrame:
-    """All-pairs cosine ≥ threshold via dimension-exploded equi-join.
-
-    posexplode → self-join on dim → groupBy pair: the shuffle is keyed
-    on dimension index (bounded fan-out), dot products accumulate as
-    partial sums — the formulation that also handles sparse vectors and
-    that a SQL oracle can replicate exactly. Norms accumulate in
-    float64, matching the dot-product accumulation order (pos asc) so
-    results are reproducible.
-    """
-    ex = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.col(vec_col)).alias("pos", "v"),
-    ).withColumn("v", F.col("v").cast("double"))
-    norms = ex.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm"))
-    a, b = ex.alias("a"), ex.alias("b")
-    dots = (
-        a.join(b, (F.col("a.pos") == F.col("b.pos")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.sum(F.col("a.v") * F.col("b.v")).alias("dot"))
-    )
-    na = norms.select(F.col("doc_id").alias("id_a"), F.col("nrm").alias("norm_a"))
-    nb = norms.select(F.col("doc_id").alias("id_b"), F.col("nrm").alias("norm_b"))
-    return (
-        dots.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn("cos_sim", F.col("dot") / (F.col("norm_a") * F.col("norm_b")))
-        .filter(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", "cos_sim")
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1279,15 +1140,10 @@ def ivf_topk(
     )
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     # squared euclidean to each centroid (same metric as the assignment)
-    d2 = F.aggregate(
-        F.zip_with(F.col("q_vec"), F.col("centroid"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     wp = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cell"))
     probes = (
         q.crossJoin(F.broadcast(centroids))
-        .withColumn("d2", d2)
+        .withColumn("d2", _sq_l2("q_vec", "centroid"))
         .withColumn("p_rnk", F.row_number().over(wp))
         .filter(F.col("p_rnk") <= n_probe)
         .select("query_id", "q_vec", "cell")
@@ -1299,11 +1155,7 @@ def ivf_topk(
         .withColumn("sim", cosine_similarity("q_vec", "c_vec"))
         .select("query_id", "neighbor_id", "sim")
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-    )
+    return rank_topk(scored, k)
 
 
 def score_queries(
@@ -1423,11 +1275,27 @@ def ann_rerank_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
+    return exact_rerank(cands, c, queries, id_col, vec_col, k, sim_round)
+
+
+def exact_rerank(
+    cands: DataFrame,
+    vectors: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    sim_round: int,
+) -> DataFrame:
+    """The re-rank stage of two-stage retrieval: fetch the raw
+    ``vectors`` (neighbor_id, c_vec) of the (query_id, neighbor_id)
+    candidate sliver only, score exact rounded cosine against the
+    broadcast queries, ``rank_topk`` to ``k``."""
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
     scored = (
-        cands.join(c, "neighbor_id")
+        cands.join(vectors, "neighbor_id")
         .join(F.broadcast(q), "query_id")
         .withColumn(
             "sim", F.round(cosine_similarity("q_vec", "c_vec"), sim_round)

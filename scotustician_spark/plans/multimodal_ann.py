@@ -106,7 +106,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_oracle(dim: int = 64, n_planes: int = 8, seed: int = 42, k: int = 5) -> str:
-    # same seeded sinusoid hyperplanes as similarity.hyperplane_bucket
+    # same seeded sinusoid hyperplanes as similarity.lsh_bucket_relation
     return f"""
     WITH ex AS (
         SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS pos,
@@ -254,7 +254,9 @@ def _ivf_oracle(n_cells: int = 8, n_probe: int = 2, k: int = 5) -> str:
     "lowest-id vectors, one assign+re-center refinement, probe the 2 "
     "nearest cells, re-rank exactly. Distances/sims round before "
     "ranking so the argmin is engine-stable. ivf_kmeans_topk is the "
-    "MLlib-quantizer sibling (rows-only).",
+    "3-step-Lloyd sibling (also oracle-gated); ivfflat_probe_only "
+    "serves the same probe (similarity.ivfflat_probe) from a "
+    "persisted index.",
 )
 def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings", normalize_ntz=False)

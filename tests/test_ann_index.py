@@ -78,9 +78,9 @@ def test_persisted_rerank_equals_oneshot(spark, corpus, index_dir):
 
 def test_probe_plan_contains_no_build(spark, corpus, index_dir):
     """The probe over a persisted index must SCAN the code/centroid
-    tables, not rebuild them: no Lloyd-step aggregation over the
-    corpus (the build's signature posexplode-avg re-centering) may
-    appear, and far fewer exchanges than the one-shot plan."""
+    tables, not rebuild them: neither the build's numpy argmin kernel
+    (a MapInArrow node) nor its Lloyd re-centering (an avg() aggregate)
+    may appear, and the shuffles stay bounded."""
     queries = corpus.filter(F.col("vec_id") < 5)
     idx = read_ivfpq_index(spark, index_dir)
     probe_plan = probe_ivfpq_index(idx, queries, k=3, n_probe=2)._jdf.queryExecution().executedPlan().toString()
@@ -89,26 +89,21 @@ def test_probe_plan_contains_no_build(spark, corpus, index_dir):
     )._jdf.queryExecution().executedPlan().toString()
     # the persisted probe reads parquet index tables
     assert "parquet" in probe_plan.lower()
-    # <=, not <: the round-8 encode change (cell rides through the
-    # code-assignment aggregate, killing the SMJ join-back) made the
-    # one-shot's VISIBLE plan as shallow as the probe's — its real
-    # extra cost (Lloyd re-centering, seed window) hides in the
-    # checkpoint jobs this string can't show; the build-signature
-    # asserts below are the discriminating check
-    assert probe_plan.count("Exchange") <= oneshot_plan.count("Exchange")
-    # absolute pin (round-8 advice): the relative <= above stops
-    # discriminating if a regression deepens BOTH plans, so probe-plan
-    # growth must fail on its own. Pin the data-bearing SHUFFLE
-    # exchanges (broadcasts are KiB-scale LUT/centroid sends and don't
-    # gate serving latency): probes window + LUT subvec agg +
-    # candidate aggregate + top-k window — 4 is the ceiling.
-    assert probe_plan.count("Exchange hashpartitioning") <= 4, probe_plan
-    # build signature (r10 shape): the Lloyd re-centering is the one
-    # aggregation the BUILD owns — since the r10 in-row rewrite it runs
-    # in the build's own bounded-collect jobs, so NEITHER final plan may
-    # contain an avg() re-centering aggregate; if one re-appears in the
-    # probe plan, the probe is rebuilding the quantizer per call.
+    # build signature: the one-shot plan encodes the corpus through
+    # the MapInArrow kernel; a probe that shows it is rebuilding the
+    # index per call
+    assert "MapInArrow" in oneshot_plan
+    assert "MapInArrow" not in probe_plan, probe_plan
+    # the Lloyd re-centering runs in the build's own bounded collects,
+    # so an avg() in the probe plan means the quantizer is retrained
     assert "avg(" not in probe_plan
+    # absolute pin on the data-bearing SHUFFLE exchanges: candidate
+    # aggregate + top-k window, with headroom to 4. Broadcasts are not
+    # counted: besides the quantizer-table and LUT broadcasts, the
+    # codes scan's dynamic partition pruning re-plans the LUT side as
+    # a broadcast subquery (one more BroadcastExchange than the
+    # one-shot plan, whose codes are not a partitioned scan)
+    assert probe_plan.count("Exchange hashpartitioning") <= 4, probe_plan
     codes_scans = probe_plan.lower().count("partitionfilters")
     assert codes_scans >= 1  # cell-partitioned codes scan is prunable
 
@@ -775,3 +770,28 @@ def test_build_rejects_null_or_ragged_vectors(spark, corpus, bad):
     )
     with pytest.raises(Exception, match=f"every vector must hold {DIM} values"):
         ivfpq_build(bad_corpus, DIM, n_cells=4, m=4, n_codes=4)
+
+
+@pytest.mark.parametrize("entry", ["pq_topk_onestep", "ivfpq_build", "ivfpq_probe"])
+def test_dim_not_divisible_by_m_raises(spark, entry):
+    """m must divide dim: a remainder would silently drop the trailing
+    dimensions from every subspace slice. The check is a ValueError,
+    not an assert, so it survives ``python -O``."""
+    from scotustician_spark.operators import similarity as SIM
+
+    dim = 10
+    vecs = spark.createDataFrame(
+        [(i, [float(i + d) for d in range(dim)]) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    calls = {
+        "pq_topk_onestep": lambda: SIM.pq_topk_onestep(vecs, vecs, dim, m=4),
+        "ivfpq_build": lambda: SIM._ivfpq_build_tables(
+            vecs, dim, "vec_id", "embedding", 2, 4, 2, 6
+        ),
+        "ivfpq_probe": lambda: SIM.ivfpq_probe(
+            [], [], vecs.select(F.col("vec_id").alias("cid")), vecs, dim, m=4
+        ),
+    }
+    with pytest.raises(ValueError, match="divide evenly"):
+        calls[entry]()

@@ -306,18 +306,18 @@ def test_source_overlap_single_scan_no_joins(spark, sf_dir):
 
 
 def test_ivfpq_assignment_partial_combines_map_side(spark, sf_dir):
-    # r10 shape: the quantizer argmins are IN-ROW (array_min over a
-    # one-row broadcast table) — the corpus encodes in a pure map, so
-    # the plan must contain NO corpus-grain exchange at all. The former
-    # pin (a partial_min struct aggregate, i.e. map-side combine before
-    # a corpus-keyed shuffle) is the shape this replaced; a regression
-    # to EITHER the relational argmin or a row_number sort window would
-    # re-shuffle the corpus and both asserts below catch it.
+    # The build's argmin passes run in a numpy mapInArrow kernel (raw
+    # distances per candidate; round + least/CASE argmin in the JVM),
+    # so the corpus encodes in a pure map: the final plan carries the
+    # MapInArrow node and NO corpus-grain exchange. A regression to the
+    # relational argmin (a partial_min struct aggregate shuffled on
+    # cid) or to a row_number sort window would re-shuffle the corpus
+    # and the two negative asserts catch it.
     # ann_build is the row that pays the inline build (ivfpq_ann_topk
     # serves the persisted index, so the build never appears in its
     # plan).
     plan = _final_plan(QUERY_REGISTRY["ann_build"].fn(spark, sf_dir))
-    assert "array_min" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "partial_min(struct(d2r" not in plan, plan
     assert "hashpartitioning(cid" not in plan, plan
 

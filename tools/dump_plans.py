@@ -2,10 +2,11 @@
 plans/<tag>/<query>_<suffix>.txt — the before/after plan artifacts the
 optimization rounds commit (judge checks plan claims against these).
 
-Expression ids (``#123``), ``plan_id=123`` tags and RDD ids
-(``MapPartitionsRDD[123]``, from checkpointed relations) are
-normalised before writing: they count up per session, so two
-checkouts' dumps of the same plan then diff byte for byte.
+Expression ids (``#123``), ``plan_id=123`` tags, RDD ids
+(``MapPartitionsRDD[123]``, from checkpointed relations) and lambda
+variable counters (``lambda x_12#…``) are normalised before writing:
+they count up per session, so two checkouts' dumps of the same plan
+then diff byte for byte.
 
 Usage: python tools/dump_plans.py <tag> <suffix> <query> [query...]
 e.g.   python tools/dump_plans.py r10 before label_propagation_communities
@@ -25,6 +26,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def normalise(plan: str) -> str:
     """Replace the per-session counters in a plan string with ``N``."""
     for pattern, repl in (
+        (r"(lambda \w+?)_\d+#", r"\1_N#"),
         (r"#\d+", "#N"),
         (r"plan_id=\d+", "plan_id=N"),
         (r"RDD\[\d+\]", "RDD[N]"),
