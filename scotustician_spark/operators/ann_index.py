@@ -22,8 +22,11 @@ Index layout on disk (all parquet, any Spark-supported filesystem):
 - ``vectors/``    (id, vec array<...>) sorted by id within partitions
   — the raw vectors for the exact re-rank stage, range-laid-out so a
   candidate-id join prunes row groups via parquet min/max stats.
-- ``meta/``       one JSON row of build parameters, written through
-  Spark (portable to any FS; no driver-local file I/O).
+- ``_MANIFEST``   written LAST (``sources/snapshot.write_group``): each
+  table's schema and row count plus the build parameters. An index is
+  complete iff it exists, and opening one reads it through the Hadoop
+  FS and pins every schema — no Spark job. Served versions publish
+  through the same module (``publish_ivfpq_version``).
 
 Determinism: the build is ``similarity.ivfpq_build`` — one-step-Lloyd
 seeds from lowest-id vectors, distances rounded before every argmin —
@@ -40,6 +43,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import snapshot
 from .similarity import (
     _d2r,
     _pq_subvecs,
@@ -119,73 +123,65 @@ def build_ivfpq_index(
     )
 
 
-def write_ivfpq_index(index: IvfPqIndex, path: str) -> None:
-    """Persist the index under ``path``. Codes pack to one row per
-    vector — (cid, codes[]) partitioned by cell (the inverted lists);
-    every vector has exactly m codes for j = 0..m-1, so position i of
-    the sorted array IS subspace i and the long form reconstructs
-    losslessly. Vectors range-lay-out by id for candidate-fetch
-    row-group pruning."""
-    m = index.params["m"]
+def _ivfpq_group(index: IvfPqIndex) -> dict:
+    """The index as ``snapshot`` group arguments (tables, fields,
+    partition_by). Codes pack to one row per vector — (cid, codes[])
+    partitioned by cell (the inverted lists); every vector has exactly
+    m codes for j = 0..m-1, so position i of the sorted array IS
+    subspace i and the long form reconstructs losslessly. Vectors
+    range-lay-out by id for candidate-fetch row-group pruning."""
     _require_integral_ids(index.codes, "cid", "write_ivfpq_index")
-    index.centroids.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/centroids"
-    )
-    index.codebooks.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/codebooks"
-    )
     packed = (
         index.codes.groupBy("cid", "cell")
         .agg(
             F.array_sort(F.collect_list(F.struct("j", "code"))).alias("jc")
         )
-        # pin the serialized types: the read side supplies this schema
-        # explicitly, so an EMPTY corpus (cell-partitioned write emits
-        # zero data files) still round-trips instead of failing
-        # schema inference
+        # pin the serialized types: the manifest records this schema,
+        # so an EMPTY corpus (cell-partitioned write emits zero data
+        # files) still round-trips instead of failing schema inference
         .select(
             F.col("cid").cast("long").alias("cid"),
             F.col("cell").cast("int").alias("cell"),
             F.col("jc.code").cast("array<int>").alias("codes"),
         )
     )
-    packed.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/codes")
-    (
-        index.vectors.repartitionByRange(F.col("cid"))
-        .sortWithinPartitions("cid")
-        .write.mode("overwrite")
-        .parquet(f"{path}/vectors")
-    )
-    spark = index.centroids.sparkSession
-    from pyspark.sql import Row
+    tables = {
+        "centroids": index.centroids.coalesce(1),
+        "codebooks": index.codebooks.coalesce(1),
+        "codes": packed,
+        "vectors": index.vectors.repartitionByRange(F.col("cid"))
+        .sortWithinPartitions("cid"),
+    }
+    return {
+        "tables": tables,
+        "fields": {"params": index.params},
+        "partition_by": {"codes": ("cell",)},
+    }
 
-    spark.createDataFrame([Row(**index.params)]).coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{path}/meta")
+
+def write_ivfpq_index(index: IvfPqIndex, path: str) -> None:
+    """Persist the index under ``path`` as one complete group."""
+    spark = index.centroids.sparkSession
+    snapshot.write_group(spark, path=path, **_ivfpq_group(index))
 
 
 def read_ivfpq_index(spark: SparkSession, path: str) -> IvfPqIndex:
     """Open a persisted index. Codes unpack to long form with a
     map-side posexplode; the cell partition column survives as a real
-    column, so the probe's cell equi-join can partition-prune."""
-    meta = spark.read.json(f"{path}/meta").collect()[0].asDict()
-    params = {
-        k: int(meta[k]) for k in ("dim", "n_cells", "m", "n_codes", "d2_round")
-    }
-    packed = spark.read.schema("cid long, codes array<int>, cell int").parquet(
-        f"{path}/codes"
-    )
-    codes = packed.select(
+    column, so the probe's cell equi-join can partition-prune. No Spark
+    job runs: the manifest carries the params and pins every schema."""
+    tables, manifest = snapshot.open_group(spark, path)
+    codes = tables["codes"].select(
         "cid",
         "cell",
         F.posexplode("codes").alias("j", "code"),
     ).withColumn("j", F.col("j").cast("int"))
     return IvfPqIndex(
-        centroids=spark.read.parquet(f"{path}/centroids"),
-        codebooks=spark.read.parquet(f"{path}/codebooks"),
+        centroids=tables["centroids"],
+        codebooks=tables["codebooks"],
         codes=codes,
-        vectors=spark.read.parquet(f"{path}/vectors"),
-        params=params,
+        vectors=tables["vectors"],
+        params=manifest["params"],
     )
 
 
@@ -314,46 +310,34 @@ def _require_integral_ids(df: DataFrame, id_col: str, who: str) -> None:
 
 
 def write_ivfflat_index(index: IvfFlatIndex, path: str) -> None:
-    """Persist the IVF-flat index. ``c_vec`` keeps its NATIVE element
-    type, recorded in the meta file so the read side can pin the
-    schema without inference (empty-corpus round-trip) — the former
+    """Persist the IVF-flat index as one group. ``c_vec`` keeps its
+    NATIVE element type, recorded in the manifest so the read side pins
+    the schema without inference (empty-corpus round-trip) — the former
     unconditional float32 cast silently truncated float64 vectors by
     ~29 mantissa bits, so a persisted-then-read index could re-rank
     differently than the in-memory twin at a rounded-sim tie (round-7
     review finding)."""
     _require_integral_ids(index.vectors, "cid", "write_ivfflat_index")
-    vt = index.vectors.schema["c_vec"].dataType.simpleString()
-    index.centroids.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/centroids"
+    vectors = index.vectors.select(
+        F.col("cid").cast("long").alias("cid"),
+        F.col("cell").cast("int").alias("cell"),
+        F.col("c_vec"),
     )
-    (
-        index.vectors.select(
-            F.col("cid").cast("long").alias("cid"),
-            F.col("cell").cast("int").alias("cell"),
-            F.col("c_vec"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors")
+    snapshot.write_group(
+        index.centroids.sparkSession,
+        {"centroids": index.centroids.coalesce(1), "vectors": vectors},
+        path,
+        {"params": index.params},
+        {"vectors": ("cell",)},
     )
-    spark = index.centroids.sparkSession
-    from pyspark.sql import Row
-
-    spark.createDataFrame(
-        [Row(**index.params, c_vec_type=vt)]
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/meta")
 
 
 def read_ivfflat_index(spark: SparkSession, path: str) -> IvfFlatIndex:
-    meta = spark.read.json(f"{path}/meta").collect()[0].asDict()
-    # pre-round-7 indexes carry no c_vec_type and WERE written float32
-    vt = meta.get("c_vec_type") or "array<float>"
+    tables, manifest = snapshot.open_group(spark, path)
     return IvfFlatIndex(
-        centroids=spark.read.parquet(f"{path}/centroids"),
-        vectors=spark.read.schema(
-            f"cid long, c_vec {vt}, cell int"
-        ).parquet(f"{path}/vectors"),
-        params={k: int(meta[k]) for k in ("n_cells", "d2_round")},
+        centroids=tables["centroids"],
+        vectors=tables["vectors"],
+        params=manifest["params"],
     )
 
 
@@ -416,24 +400,15 @@ def write_tombstones(
     ).write.mode("append").parquet(f"{path}/tombstones")
 
 
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop FS existence probe (any scheme the session can reach).
-    Only a MISSING path may mean 'empty state' — genuine read errors
-    (transient FS failure, corrupt footer) must propagate, otherwise a
-    server would silently serve deleted vectors or re-publish v1 over
-    an existing 'immutable' version dir."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def read_tombstones(spark: SparkSession, path: str) -> DataFrame:
     """The live tombstone set (distinct cids; empty frame when none
     were ever written — schema pinned, never inferred). Emptiness is
-    decided by an FS existence probe, not by swallowing read errors."""
-    if not _fs_exists(spark, f"{path}/tombstones"):
+    decided by an FS existence probe, not by swallowing read errors:
+    only a MISSING path may mean 'no tombstones' — a genuine read error
+    (transient FS failure, corrupt footer) must propagate, or a server
+    would silently serve deleted vectors."""
+    fs, hpath = snapshot.hadoop_fs(spark, f"{path}/tombstones")
+    if not fs.exists(hpath):
         return spark.createDataFrame([], "cid long")
     return spark.read.schema("cid long").parquet(f"{path}/tombstones").distinct()
 
@@ -463,15 +438,17 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
       candidates come from codes).
     - tombstones/: truncated to the empty pinned-schema relation.
 
+    The manifest is left as the build wrote it: schemas are unchanged,
+    and its row counts stay those of the build.
+
     Returns {"removed": n, "cells_rewritten": n, "cells_dropped": n}.
     Idempotent: a second call is a no-op."""
     tombs = read_tombstones(spark, path).localCheckpoint(eager=True)
     n_doom = tombs.count()
     if n_doom == 0:
         return {"removed": 0, "cells_rewritten": 0, "cells_dropped": 0}
-    packed = spark.read.schema("cid long, codes array<int>, cell int").parquet(
-        f"{path}/codes"
-    )
+    tables, _ = snapshot.open_group(spark, path)
+    packed = tables["codes"]
     touched = (
         packed.join(F.broadcast(tombs), "cid")
         .select("cell")
@@ -500,14 +477,11 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
             spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         else:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
-    if emptied:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        for cell in emptied:
-            p = jvm.org.apache.hadoop.fs.Path(f"{path}/codes/cell={cell}")
-            p.getFileSystem(hconf).delete(p, True)
+    for cell in emptied:
+        fs, hcell = snapshot.hadoop_fs(spark, f"{path}/codes/cell={cell}")
+        fs.delete(hcell, True)
     vecs = (
-        spark.read.parquet(f"{path}/vectors")
+        tables["vectors"]
         .join(F.broadcast(tombs), "cid", "left_anti")
         .localCheckpoint(eager=True)
     )
@@ -572,99 +546,20 @@ def ivfpq_tombstone_sink(
 
 # ---- versioned publication + streaming maintenance ----------------
 
-def _scan_complete_versions(spark: SparkSession, root: str) -> int | None:
-    """Highest COMPLETE version dir under ``root`` (``v<N>`` whose
-    ``meta/_SUCCESS`` exists — meta is the LAST dir both
-    write_ivfpq_index and write_ivfflat_index commit, and writes are
-    sequential, so its marker implies every other table landed; a
-    crash between vectors and meta leaves a version this scan
-    correctly skips — round-8 review finding). The recovery source of
-    truth when the LATEST pointer is
-    missing or torn."""
-    import re
-
-    jvm = spark.sparkContext._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
-    rp = jvm.org.apache.hadoop.fs.Path(root)
-    if not fs.exists(rp):
-        return None
-    best = None
-    for st in fs.listStatus(rp):
-        m = re.fullmatch(r"v(\d+)", st.getPath().getName())
-        if m and _fs_exists(
-            spark, f"{root}/v{m.group(1)}/meta/_SUCCESS"
-        ):
-            best = max(best or 0, int(m.group(1)))
-    return best
-
-
-def _latest_version(spark: SparkSession, root: str) -> int | None:
-    """Read the LATEST pointer (one JSON row written through Spark).
-    A MISSING or EMPTY pointer falls back to scanning the version dirs
-    (a crash between the pointer delete and its rewrite must not reset
-    versioning to v1 — that would overwrite an existing 'immutable'
-    version and orphan the rest, the round-7 review's torn-flip
-    scenario); a pointer that exists but can't be READ still raises —
-    a transient FS error must propagate, not downgrade the version."""
-    if not _fs_exists(spark, f"{root}/LATEST"):
-        return _scan_complete_versions(spark, root)
-    # explicit schema: an EMPTY pointer dir (crash mid-write) must read
-    # as zero rows, not throw schema inference
-    rows = spark.read.schema("version long").json(f"{root}/LATEST").collect()
-    if not rows:  # pointer dir exists but is EMPTY: the torn state
-        return _scan_complete_versions(spark, root)
-    if "version" not in rows[0].asDict() or rows[0]["version"] is None:
-        # present-but-garbage is CORRUPTION, not a torn flip: raise
-        raise ValueError(f"corrupt LATEST pointer under {root}")
-    return int(rows[0]["version"])
-
-
 def publish_ivfpq_version(index: IvfPqIndex, root: str) -> int:
     """Publish ``index`` as the next immutable version under
-    ``root/v<N>`` and flip the LATEST pointer — the serving contract
-    for index updates: a reader that opened v<N-1> keeps a consistent
-    snapshot while v<N> lands, and the pointer flip is the only
-    mutation. The flip writes to a temp dir then RENAMES over LATEST
-    (atomic on HDFS/local; on S3-like stores pair with conditional
-    puts), and even a torn flip is healed: ``_latest_version`` falls
-    back to scanning the complete version dirs, so recovery never
-    resets to v1 over existing versions. Returns N."""
+    ``root/v<N>`` and flip the LATEST pointer (``snapshot.publish``) —
+    the serving contract for index updates: a reader that opened
+    v<N-1> keeps a consistent snapshot while v<N> lands, and the
+    pointer flip is the only mutation. A torn flip heals from the
+    newest complete version, and a complete version the pointer never
+    reached is skipped, never overwritten. Returns N."""
     spark = index.centroids.sparkSession
-    cur = _latest_version(spark, root)
-    nxt = 1 if cur is None else cur + 1
-    write_ivfpq_index(index, f"{root}/v{nxt}")
-    from pyspark.sql import Row
-
-    tmp = f"{root}/LATEST__tmp"
-    spark.createDataFrame([Row(version=nxt)]).coalesce(1).write.mode(
-        "overwrite"
-    ).json(tmp)
-    jvm = spark.sparkContext._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
-    dst = jvm.org.apache.hadoop.fs.Path(f"{root}/LATEST")
-    if fs.exists(dst):
-        fs.delete(dst, True)
-    # Hadoop rename signals failure by RETURNING false, not raising;
-    # swallowing it would leave LATEST deleted and the tmp dir
-    # lingering while readers silently depend on the scan fallback
-    # (round-8 review finding). The version dir itself is committed
-    # either way, so the raise is safe to retry: the next publish
-    # continues from the scan.
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dst):
-        raise IOError(
-            f"failed to flip LATEST -> v{nxt} under {root}: "
-            f"rename({tmp}) returned false; the version dir is "
-            "committed and recoverable via the version scan"
-        )
-    return nxt
+    return snapshot.publish(spark, root=root, **_ivfpq_group(index))
 
 
 def read_latest_ivfpq(spark: SparkSession, root: str) -> IvfPqIndex:
-    v = _latest_version(spark, root)
+    v = snapshot.latest(spark, root)
     if v is None:
         raise FileNotFoundError(
             f"no published index version under {root} — bootstrap with "

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..operators import ann_index as ANN
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
+from ..sources.snapshot import MANIFEST
 from .registry import register
 from .tables import load_table
 
@@ -560,10 +561,10 @@ def ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (path + size + mtime) and the build parameters, so a regenerated
 # testdata set or a parameter change triggers a rebuild while repeat
 # probes — the serving reality — read the persisted tables only.
-# write_ivfpq_index writes meta/ LAST, so meta/_SUCCESS marks a
-# complete index; a partial write is rebuilt. (Fingerprinting stats
-# the local filesystem — swap for a catalog/manifest check on an
-# object store.)
+# Each index is a sources/snapshot group: its _MANIFEST is written
+# LAST, so it marks a complete index; a partial write is rebuilt.
+# (Fingerprinting stats the local filesystem — swap for a
+# catalog/manifest check on an object store.)
 
 # shares the overridable cache root with tables.py so test runs keep
 # their one-shot tmp-dataset index builds out of the repo warehouse
@@ -572,6 +573,9 @@ from .tables import _CACHE_ROOT
 _INDEX_ROOT = os.path.join(_CACHE_ROOT, "ann_index")
 _IVFPQ_DIM = 64
 _IVFPQ_PARAMS = {"n_cells": 8, "m": 4, "n_codes": 8, "d2_round": 6}
+# on-disk layout tag: part of every fingerprint, so index dirs of an
+# older layout re-key and prune as stale siblings
+_INDEX_FORMAT = "manifest"
 
 
 def _embeddings_fingerprint(sf_dir: str, extra: str = "") -> str:
@@ -586,17 +590,19 @@ def _embeddings_fingerprint(sf_dir: str, extra: str = "") -> str:
     else:
         s = os.stat(p)
         st.append((p, s.st_size, int(s.st_mtime)))
-    st.append(tuple(sorted(_IVFPQ_PARAMS.items())) + (_IVFPQ_DIM, extra))
+    st.append(
+        tuple(sorted(_IVFPQ_PARAMS.items())) + (_IVFPQ_DIM, extra, _INDEX_FORMAT)
+    )
     return hashlib.md5(repr(st).encode()).hexdigest()[:16]
 
 
 # session -> {(kind, path): opened index}. A server opens its index
-# once and probes many times; re-opening per probe call paid ~0.7 s at
-# sf0.1 — a 1-row meta .collect() job plus three parquet footer reads
-# (measured round 9, tools/ab_probe.py). The path embeds the dataset
-# fingerprint AND the build params, so a regenerated dataset or a
-# parameter change re-keys and the stale entry is simply never looked
-# up again; weak keys drop a stopped session's entries (the
+# once and probes many times: an open reads the manifest and lists the
+# tables' files, and the handle keeps the quantizer rows its first
+# probe collected (IvfPqIndex.quantizer_rows). The path embeds the
+# dataset fingerprint AND the build params, so a regenerated dataset
+# or a parameter change re-keys and the stale entry is simply never
+# looked up again; weak keys drop a stopped session's entries (the
 # tables._CACHE discipline).
 _OPEN_INDEX_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
@@ -625,7 +631,7 @@ def _served_ivfpq_index(
     cached = per_session.get(("ivfpq", path))
     if cached is not None:
         return cached
-    if not os.path.exists(os.path.join(path, "meta", "_SUCCESS")):
+    if not os.path.exists(os.path.join(path, MANIFEST)):
         e = load_table(spark, sf_dir, "embeddings", normalize_ntz=False)
         if base_pred:
             e = e.filter(F.expr(base_pred))
@@ -670,7 +676,7 @@ def _served_ivfflat_index(spark: SparkSession, sf_dir: str) -> ANN.IvfFlatIndex:
     cached = per_session.get(("ivfflat", path))
     if cached is not None:
         return cached
-    if not os.path.exists(os.path.join(path, "meta", "_SUCCESS")):
+    if not os.path.exists(os.path.join(path, MANIFEST)):
         e = load_table(spark, sf_dir, "embeddings", normalize_ntz=False)
         ANN.write_ivfflat_index(
             ANN.build_ivfflat_index(e, n_cells=8, d2_round=6), path
@@ -773,7 +779,7 @@ def _served_compacted_index(spark: SparkSession, sf_dir: str) -> ANN.IvfPqIndex:
     place; the build is deterministic, so the copy equals the shared
     index byte-for-semantics. One-time per dataset fingerprint:
     tombstone → build → compact (tombstones commit first so the
-    index's meta/_SUCCESS implies they are persisted); after that,
+    index's _MANIFEST implies they are persisted); after that,
     opens memoize per (session, path) like every served index."""
     from .tables import _prune_stale
 
@@ -785,11 +791,11 @@ def _served_compacted_index(spark: SparkSession, sf_dir: str) -> ANN.IvfPqIndex:
     if cached is not None:
         return cached
     e = load_table(spark, sf_dir, "embeddings", normalize_ntz=False)
-    if not os.path.exists(os.path.join(path, "meta", "_SUCCESS")):
-        # tombstones BEFORE the index build commit: meta/_SUCCESS is
+    if not os.path.exists(os.path.join(path, MANIFEST)):
+        # tombstones BEFORE the index build commit: _MANIFEST is
         # write_ivfpq_index's last artifact, so committing tombstones
-        # first makes _SUCCESS imply the tombstone set is on disk — a
-        # crash between the two re-enters this branch (no _SUCCESS) and
+        # first makes it imply the tombstone set is on disk — a crash
+        # between the two re-enters this branch (no _MANIFEST) and
         # the append-mode tombstone write is idempotent-in-effect
         # (read_tombstones collapses duplicates). The old order left a
         # completed-looking index with no tombstones: every later open
@@ -802,8 +808,8 @@ def _served_compacted_index(spark: SparkSession, sf_dir: str) -> ANN.IvfPqIndex:
         ANN.write_ivfpq_index(idx, path)
         _prune_stale(_INDEX_ROOT, f"ivfpqc_{tag}_", keep=f"ivfpqc_{tag}_{fp}")
     # fold in any tombstones not yet compacted — also heals a crash
-    # between the index commit and the compaction (meta/_SUCCESS
-    # already exists then, so the build branch won't rerun)
+    # between the index commit and the compaction (_MANIFEST already
+    # exists then, so the build branch won't rerun)
     if ANN.read_tombstones(spark, path).take(1):
         ANN.compact_ivfpq_index(spark, path)
     # read_..._live: belt-and-braces — after compaction the tombstone

@@ -45,10 +45,11 @@ def _catalog_stamp(spark: SparkSession | None, path: str) -> tuple | None:
     """Manifest-based dataset stamp for paths ``os.stat`` cannot see
     (hdfs://, s3a://...): the content hash of the dataset's manifest
     file — ``_ingest_manifest.json`` (written by the ingest sink,
-    sources/oa_datasource.py) or ``_MANIFEST`` (the snapshot
-    discipline, sources/snapshot.py) — read through the Hadoop
-    FileSystem, which reaches any store the session can. A manifest
-    rewrites whenever the dataset republishes; the stamp combines its
+    sources/oa_datasource.py) or ``_MANIFEST`` (a complete group of
+    the versioned-publish protocol, sources/snapshot.py) — read through
+    ``snapshot.hadoop_fs``/``read_bytes``, which reach any store the
+    session can. A manifest rewrites whenever the dataset
+    republishes; the stamp combines its
     content hash WITH its FS modification time + length, because
     manifest CONTENT alone can collide across republishes (the ingest
     manifest records per-term counts — a one-document correction can
@@ -62,26 +63,16 @@ def _catalog_stamp(spark: SparkSession | None, path: str) -> tuple | None:
     if spark is None:
         return None
     try:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
+        from ..sources.snapshot import hadoop_fs, read_bytes
+
         for mf in ("_ingest_manifest.json", "_MANIFEST"):
-            p = jvm.org.apache.hadoop.fs.Path(f"{path}/{mf}")
-            fs = p.getFileSystem(hconf)
+            fs, p = hadoop_fs(spark, f"{path}/{mf}")
             if fs.exists(p):
                 st = fs.getFileStatus(p)
-                stream = fs.open(p)
-                try:
-                    # commons-io drains JVM-side; py4j passes byte[]
-                    # BY VALUE so a Python read(buf) loop sees nothing
-                    data = jvm.org.apache.commons.io.IOUtils.toByteArray(
-                        stream
-                    )
-                finally:
-                    stream.close()
                 return (
                     "manifest",
                     mf,
-                    _hashlib.md5(bytes(data)).hexdigest(),
+                    _hashlib.md5(read_bytes(spark, f"{path}/{mf}")).hexdigest(),
                     int(st.getModificationTime()),
                     int(st.getLen()),
                 )

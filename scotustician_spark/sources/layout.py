@@ -27,13 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 def _total_input_bytes(spark: SparkSession, df: DataFrame) -> int:
     """Sum file sizes through the Hadoop FS API (works on any
     supported filesystem, not just local)."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
+    from .snapshot import hadoop_fs
+
     total = 0
     for uri in df.inputFiles():
-        path = jvm.org.apache.hadoop.fs.Path(uri)
-        fs = path.getFileSystem(conf)
+        fs, path = hadoop_fs(spark, uri)
         total += fs.getFileStatus(path).getLen()
     return total
 

@@ -18,13 +18,13 @@ from pyspark.sql import functions as F
 def _has_data(spark: SparkSession, path: str) -> bool:
     """True if ``path`` exists and holds at least one non-metadata entry.
 
-    Uses the Hadoop FileSystem API (same as layout.py) so the sinks work
+    Uses the Hadoop FileSystem API (``snapshot.hadoop_fs``) so the sinks work
     on any Hadoop-compatible store (s3a://, hdfs://, file://), not just
     the driver-local filesystem that os.path can see.
     """
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    from .snapshot import hadoop_fs
+
+    fs, jpath = hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return False
     return any(
@@ -241,6 +241,7 @@ def observed_write(
     metrics: dict[str, F.Column] | None = None,
     fmt: str = "parquet",
     mode: str = "overwrite",
+    partition_cols: tuple[str, ...] = (),
 ) -> dict:
     """Write ``df`` and collect pipeline metrics from the SAME pass
     using ``df.observe`` — the zero-extra-scan form of the S5
@@ -256,7 +257,8 @@ def observed_write(
     defaults to ``n_rows``. Returns the collected metric dict after
     the write completes. Gate-style use: call, then assert
     ``out["n_rows"] > 0`` — the verification Choice-state with zero
-    re-read cost.
+    re-read cost. ``partition_cols`` lays the output out as
+    ``write_partitioned`` does.
     """
     from pyspark.sql import Observation
 
@@ -265,5 +267,5 @@ def observed_write(
     obs = Observation()
     named = [c.alias(name) for name, c in metrics.items()]
     observed = df.observe(obs, *named)
-    observed.write.format(fmt).mode(mode).save(path)
+    observed.write.partitionBy(*partition_cols).format(fmt).mode(mode).save(path)
     return dict(obs.get)

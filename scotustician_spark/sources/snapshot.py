@@ -1,26 +1,33 @@
-"""Multi-table consistent snapshot publication — the lakehouse
-"transactional view" pattern without a table format.
+"""Versioned publication of table groups — the package's one crash-safe
+publish protocol, and its one Hadoop-FileSystem helper.
 
 The reference publishes related outputs as independent S3 writes, so a
 reader can observe table A from run N and table B from run N−1. Here a
-GROUP of relations publishes as one immutable snapshot version:
+GROUP of relations is written as one unit, and a versioned root holds
+immutable groups behind a pointer:
 
     root/
-      v1/<table>/...      immutable parquet per table
-      v1/_MANIFEST        row counts + table list (written LAST inside
-                          the version — marks the version complete)
-      LATEST              one-row JSON pointer, flipped LAST of all
+      v1/<table>/...      parquet per table (partition columns as dirs)
+      v1/_MANIFEST        JSON: each table's schema and row count (observed
+                          during the write), plus the caller's fields —
+                          written LAST inside the group; a group is
+                          complete iff its _MANIFEST exists
+      LATEST              {"version": N}: written to a temp file, then
+                          renamed over the old pointer — flipped LAST
 
-Readers resolve LATEST once and read only ``v<N>/`` paths, so they keep
-a consistent multi-table view while v<N+1> lands; a crash mid-publish
-leaves a version dir without _MANIFEST (ignored) and the pointer
-untouched. The same discipline as the persisted ANN index's versioned
-publication (operators/ann_index.py::publish_ivfpq_version), lifted to
-arbitrary table groups — e.g. the medallion bronze/silver/gold set, so
-a dashboard never joins silver@N against gold@N−1. On S3-like stores
-pair the pointer flip with a conditional put; in a Delta/Iceberg
-deployment this is a multi-table transaction or a single COMMIT on a
-shared catalog.
+Everything outside the parquet writes goes through the Hadoop FS, so no
+Spark job runs to resolve a version or open a group: the manifest pins
+every table's schema (no inference) and carries the caller's metadata.
+A crash mid-publish leaves a version without _MANIFEST (ignored, and
+reused by the next publish) or a complete version the pointer does not
+name yet (never overwritten: the next version number is past both).
+
+Callers: every persisted ANN index is a group and every served index
+version a published one (operators/ann_index.py), and
+``streaming.incremental.exactly_once_merge_sink`` publishes one version
+per applied micro-batch. On S3-like stores pair the pointer flip with a
+conditional put; in a Delta/Iceberg deployment this is a multi-table
+transaction or a single COMMIT on a shared catalog.
 """
 
 from __future__ import annotations
@@ -28,117 +35,174 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from .sinks import observed_write
+
+MANIFEST = "_MANIFEST"
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    ), hpath, jvm
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` — any scheme the session can
+    reach (file://, hdfs://, s3a://)."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
 
 
-def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    fs, hpath, _ = _fs(spark, path)
-    out = fs.create(hpath, True)
-    out.write(bytearray(text.encode()))
-    out.close()
-
-
-def _read_text(spark: SparkSession, path: str) -> str:
+def read_bytes(spark: SparkSession, path: str) -> bytes:
     # commons-io (on Spark's classpath via Hadoop) drains the stream
     # JVM-side; a Python-side read(byte[]) loop would see nothing —
     # py4j passes arrays by value, so Java-side mutation is lost
-    fs, hpath, jvm = _fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     stream = fs.open(hpath)
     try:
-        data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        return bytes(data).decode()
+        io = spark.sparkContext._jvm.org.apache.commons.io.IOUtils
+        return bytes(io.toByteArray(stream))
     finally:
         stream.close()
 
 
+def _write_text(spark: SparkSession, path: str, text: str) -> None:
+    fs, hpath = hadoop_fs(spark, path)
+    out = fs.create(hpath, True)
+    try:
+        out.write(bytearray(text.encode()))
+    finally:
+        out.close()
+
+
+def _replace(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` over ``dst``. Hadoop rename refuses an existing
+    target, so the old file goes first; a crash in between leaves no
+    pointer, which ``latest`` heals from the newest complete version.
+    A rename that RETURNS false (Hadoop's failure signal) raises."""
+    fs, hdst = hadoop_fs(spark, dst)
+    _, hsrc = hadoop_fs(spark, src)
+    if fs.exists(hdst):
+        fs.delete(hdst, False)
+    if not fs.rename(hsrc, hdst):
+        raise IOError(f"rename({src} -> {dst}) returned false")
+
+
+def write_group(
+    spark: SparkSession,
+    tables: dict[str, DataFrame],
+    path: str,
+    fields: dict | None = None,
+    partition_by: dict[str, tuple[str, ...]] | None = None,
+) -> dict:
+    """Write ``tables`` as parquet under ``path/<name>`` (in dict order,
+    ``partition_by[name]`` as partition columns), then ``_MANIFEST``.
+    A stale manifest is removed first, so a group rewritten in place is
+    incomplete until its new manifest lands. Returns the manifest."""
+    fs, hmanifest = hadoop_fs(spark, f"{path}/{MANIFEST}")
+    if fs.exists(hmanifest):
+        fs.delete(hmanifest, False)
+    entries = {}
+    for name, df in tables.items():
+        parts = tuple((partition_by or {}).get(name, ()))
+        n = observed_write(df, f"{path}/{name}", partition_cols=parts)["n_rows"]
+        # the read side's column order: partition columns come last
+        schema = StructType(
+            [f for f in df.schema if f.name not in parts]
+            + [df.schema[p] for p in parts]
+        )
+        entries[name] = {"schema": schema.jsonValue(), "rows": n}
+    manifest = {**(fields or {}), "tables": entries}
+    _write_text(spark, f"{path}/{MANIFEST}", json.dumps(manifest))
+    return manifest
+
+
+def open_group(spark: SparkSession, path: str) -> tuple[dict[str, DataFrame], dict]:
+    """``(tables, manifest)`` of a complete group: each table opens with
+    the schema its manifest pins, so no Spark job runs (and an empty
+    partitioned table, which has no data files, still opens)."""
+    manifest = json.loads(read_bytes(spark, f"{path}/{MANIFEST}"))
+    tables = {
+        name: spark.read.schema(StructType.fromJson(t["schema"])).parquet(
+            f"{path}/{name}"
+        )
+        for name, t in manifest["tables"].items()
+    }
+    return tables, manifest
+
+
 def _complete_versions(spark: SparkSession, root: str) -> list[int]:
-    fs, hroot, jvm = _fs(spark, root)
+    fs, hroot = hadoop_fs(spark, root)
     if not fs.exists(hroot):
         return []
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     out = []
     for st in fs.listStatus(hroot):
         name = st.getPath().getName()
         if name.startswith("v") and name[1:].isdigit() and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(st.getPath(), "_MANIFEST")
+            Path(st.getPath(), MANIFEST)
         ):
             out.append(int(name[1:]))
     return sorted(out)
 
 
-def latest_snapshot_version(spark: SparkSession, root: str) -> int | None:
-    """The LATEST pointer's version. Missing pointer → None; a pointer
-    that exists but cannot be read RAISES (never silently restart at
-    v1 over immutable versions — the ann_index discipline)."""
-    fs, _, jvm = _fs(spark, f"{root}/LATEST")
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{root}/LATEST")):
-        return None
-    return int(json.loads(_read_text(spark, f"{root}/LATEST"))["version"])
+def latest(spark: SparkSession, root: str) -> int | None:
+    """The version LATEST names. A missing or EMPTY pointer (a crash
+    inside the flip) heals from the newest complete version, None when
+    there is none; a pointer that is present but garbage RAISES (never
+    silently restart at v1 over immutable versions)."""
+    fs, hpath = hadoop_fs(spark, f"{root}/LATEST")
+    text = read_bytes(spark, f"{root}/LATEST").strip() if fs.exists(hpath) else b""
+    if not text:
+        done = _complete_versions(spark, root)
+        return done[-1] if done else None
+    return int(json.loads(text)["version"])
 
 
-def publish_snapshot(
-    spark: SparkSession, tables: dict[str, DataFrame], root: str
+def publish(
+    spark: SparkSession,
+    tables: dict[str, DataFrame],
+    root: str,
+    fields: dict | None = None,
+    partition_by: dict[str, tuple[str, ...]] | None = None,
 ) -> int:
-    """Publish ``tables`` as the next immutable snapshot version and
-    flip LATEST. Returns the new version number. Write order is the
-    whole safety argument: per-table parquet → _MANIFEST (version now
-    complete) → LATEST (readers can now see it)."""
-    # Next version = past BOTH the pointer and any complete-but-
-    # unpointed version: a crash between the _MANIFEST write and the
-    # pointer flip leaves v<N> complete (readable via explicit time
-    # travel) while LATEST still says N-1 — deriving from the pointer
-    # alone would silently overwrite that immutable version in place.
-    cur = latest_snapshot_version(spark, root) or 0
-    done = _complete_versions(spark, root)
-    nxt = max(cur, max(done, default=0)) + 1
-    vdir = f"{root}/v{nxt}"
-    manifest: dict[str, int] = {}
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(f"{vdir}/{name}")
-        manifest[name] = spark.read.parquet(f"{vdir}/{name}").count()
-    _write_text(
-        spark,
-        f"{vdir}/_MANIFEST",
-        json.dumps({"version": nxt, "tables": manifest}),
+    """Write ``tables`` as the next immutable version ``root/v<N>`` and
+    flip LATEST to it; returns N. Write order is the whole safety
+    argument: tables → _MANIFEST (version complete) → pointer temp file
+    → rename (readers now see it). N is past BOTH the pointer and the
+    newest complete version: a crash between the manifest and the flip
+    leaves v<N> complete but unnamed, and must never be overwritten."""
+    cur = latest(spark, root) or 0
+    nxt = max(cur, max(_complete_versions(spark, root), default=0)) + 1
+    write_group(
+        spark, tables, f"{root}/v{nxt}", {"version": nxt, **(fields or {})},
+        partition_by,
     )
-    _write_text(spark, f"{root}/LATEST", json.dumps({"version": nxt}))
+    _write_text(spark, f"{root}/_LATEST.tmp", json.dumps({"version": nxt}))
+    _replace(spark, f"{root}/_LATEST.tmp", f"{root}/LATEST")
     return nxt
 
 
-def read_snapshot(
+def read(
     spark: SparkSession, root: str, version: int | None = None
 ) -> dict[str, DataFrame]:
     """A CONSISTENT multi-table view: every returned relation reads
     from the same immutable ``v<N>/`` — publications after the resolve
     are invisible. ``version=None`` resolves LATEST; an explicit
-    version gives time travel over retained snapshots."""
-    v = latest_snapshot_version(spark, root) if version is None else version
+    version gives time travel over retained versions."""
+    v = latest(spark, root) if version is None else version
     if v is None:
-        raise FileNotFoundError(f"no published snapshot under {root}")
-    manifest = json.loads(_read_text(spark, f"{root}/v{v}/_MANIFEST"))
-    return {
-        name: spark.read.parquet(f"{root}/v{v}/{name}")
-        for name in manifest["tables"]
-    }
+        raise FileNotFoundError(f"no published version under {root}")
+    return open_group(spark, f"{root}/v{v}")[0]
 
 
-def prune_snapshots(spark: SparkSession, root: str, keep: int = 2) -> list[int]:
+def prune(spark: SparkSession, root: str, keep: int = 2) -> list[int]:
     """Drop all but the newest ``keep`` COMPLETE versions (incomplete
     crash leftovers are removed too, except anything at or above the
     newest kept version). The version LATEST points to is never
     dropped, even in a torn-publish state where a newer complete-but-
     unpointed version exists — pruning the pointer's target would
-    break every ``read_snapshot()``. Returns the dropped versions."""
-    fs, hroot, jvm = _fs(spark, root)
+    break every ``read()``. Returns the dropped versions."""
+    fs, hroot = hadoop_fs(spark, root)
     done = _complete_versions(spark, root)
     cutoff = done[-keep] if len(done) >= keep else (done[0] if done else 0)
-    pointed = latest_snapshot_version(spark, root)
+    pointed = latest(spark, root)
     if pointed is not None:
         cutoff = min(cutoff, pointed)
     dropped = []

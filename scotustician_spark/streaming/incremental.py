@@ -20,32 +20,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from scotustician_spark.sources import snapshot
 from scotustician_spark.sources.sinks import idempotent_append
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    ), hpath, jvm
-
-
-def _applied_versions(spark: SparkSession, versions: str) -> list[int]:
-    """Batch ids with a COMPLETE version dir (``b=<id>/_APPLIED``
-    marker present — a dir without the marker is a crashed write and
-    is recomputed)."""
-    fs, root, jvm = _fs(spark, versions)
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("b=") and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(st.getPath(), "_APPLIED")
-        ):
-            out.append(int(name[2:]))
-    return sorted(out)
 
 
 def exactly_once_merge_sink(
@@ -64,13 +40,13 @@ def exactly_once_merge_sink(
     would be merged twice, double-counting. This helper makes the
     merge exactly-once by versioning state per batch id:
 
-    - versions live at ``{state_path}__versions/b=<batch_id>``; a
-      version is complete only once its ``_APPLIED`` marker exists
-      (written strictly after the parquet write returns);
-    - batch N merges ``partial`` into the LATEST COMPLETE version
-      < N — never into the published copy — and writes version N;
-      a replayed batch (id <= latest complete) merges nothing and
-      only re-publishes, so it is a no-op on the counts;
+    - versions publish through ``sources/snapshot.publish`` under
+      ``{state_path}__versions``, one per applied batch, with the
+      batch id in the version's manifest;
+    - batch N merges ``partial`` into the LATEST version — never into
+      the published copy — and publishes the result; a replayed batch
+      (id <= the latest manifest's) merges nothing and only
+      re-publishes, so it is a no-op on the counts;
     - ``state_path`` itself is a PUBLISHED copy of the latest
       version, refreshed after every apply/replay, so readers keep
       the plain ``spark.read.parquet(state_path)`` contract; a crash
@@ -91,29 +67,27 @@ def exactly_once_merge_sink(
     width / vocabulary / groups×bins), so the extra publish read+write
     per batch is O(state), never O(history)."""
     versions = state_path + "__versions"
-    done = _applied_versions(spark, versions)
-    applied = done[-1] if done else -1
-    fs, _, jvm = _fs(spark, versions)
-    if batch_id > applied:
-        if applied >= 0:
-            base = spark.read.parquet(f"{versions}/b={applied}")
-            merged = merge(base, partial)
-        else:
-            merged = partial
-        vdir = f"{versions}/b={batch_id}"
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(vdir)
-        fs.create(
-            jvm.org.apache.hadoop.fs.Path(f"{vdir}/_APPLIED"), True
-        ).close()
-        applied = batch_id
+    v = snapshot.latest(spark, versions)
+    tables, manifest = (
+        snapshot.open_group(spark, f"{versions}/v{v}")
+        if v is not None
+        else ({}, {"batch_id": -1})
+    )
+    if batch_id > manifest["batch_id"]:
+        merged = merge(tables["state"], partial) if tables else partial
+        v = snapshot.publish(
+            spark,
+            {"state": merged.localCheckpoint(eager=True)},
+            versions,
+            {"batch_id": batch_id},
+        )
+        tables, _ = snapshot.open_group(spark, f"{versions}/v{v}")
     # publish (also heals a previous torn publish on replay)
-    published = spark.read.parquet(f"{versions}/b={applied}")
+    published = tables["state"]
     if publish is not None:
         published = publish(published)
     published.write.mode("overwrite").parquet(state_path)
-    for old in _applied_versions(spark, versions):
-        if old < applied:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{versions}/b={old}"), True)
+    snapshot.prune(spark, versions, keep=1)
 
 
 def incremental_filter(

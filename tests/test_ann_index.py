@@ -201,8 +201,8 @@ def test_versioned_publish_and_stream_sink(spark, corpus, tmp_path):
         ivfpq_stream_sink,
         publish_ivfpq_version,
         read_latest_ivfpq,
-        _latest_version,
     )
+    from scotustician_spark.sources.snapshot import latest as _latest_version
 
     root = str(tmp_path / "served")
     base = corpus.filter(F.col("vec_id") < 40)
@@ -239,8 +239,8 @@ def test_stream_sink_through_real_stream(spark, corpus, tmp_path):
     from scotustician_spark.operators.ann_index import (
         ivfpq_stream_sink,
         publish_ivfpq_version,
-        _latest_version,
     )
+    from scotustician_spark.sources.snapshot import latest as _latest_version
 
     root = str(tmp_path / "sroot")
     src = str(tmp_path / "src")
@@ -493,10 +493,8 @@ def test_tombstone_and_latest_read_errors_propagate(spark, tmp_path):
 
     import pytest
 
-    from scotustician_spark.operators.ann_index import (
-        _latest_version,
-        read_tombstones,
-    )
+    from scotustician_spark.operators.ann_index import read_tombstones
+    from scotustician_spark.sources.snapshot import latest as _latest_version
 
     # missing paths: clean empties
     assert read_tombstones(spark, str(tmp_path / "idx")).count() == 0
@@ -511,8 +509,8 @@ def test_tombstone_and_latest_read_errors_propagate(spark, tmp_path):
 
     # corrupt LATEST pointer: present but unreadable as {version: N}
     root = tmp_path / "bad_root"
-    os.makedirs(root / "LATEST")
-    (root / "LATEST" / "part-00000.json").write_text("{\"nonsense\": true}")
+    os.makedirs(root)
+    (root / "LATEST").write_text("{\"nonsense\": true}")
     with pytest.raises(Exception):
         _latest_version(spark, str(root))
 
@@ -523,13 +521,13 @@ def test_torn_latest_pointer_recovers_from_version_scan(spark, corpus, tmp_path)
     'immutable' version dir). A missing or empty pointer now falls
     back to scanning the complete version dirs; the next publish
     continues the sequence and repairs the pointer."""
-    import shutil
+    import os
 
     from scotustician_spark.operators.ann_index import (
-        _latest_version,
         publish_ivfpq_version,
         read_latest_ivfpq,
     )
+    from scotustician_spark.sources.snapshot import latest as _latest_version
 
     root = str(tmp_path / "torn")
     idx = build_ivfpq_index(
@@ -539,37 +537,34 @@ def test_torn_latest_pointer_recovers_from_version_scan(spark, corpus, tmp_path)
     assert publish_ivfpq_version(idx, root) == 2
 
     # simulate the torn flip: pointer gone, version dirs intact
-    shutil.rmtree(f"{root}/LATEST")
+    os.remove(f"{root}/LATEST")
     assert _latest_version(spark, root) == 2  # healed from the scan
     assert read_latest_ivfpq(spark, root).vectors.count() == 40
     assert publish_ivfpq_version(idx, root) == 3  # continues, not v1
     assert _latest_version(spark, root) == 3
 
-    # empty pointer dir (crash mid-write) heals the same way
-    shutil.rmtree(f"{root}/LATEST")
-    import os
-
-    os.makedirs(f"{root}/LATEST")
+    # empty pointer file (crash mid-write) heals the same way
+    open(f"{root}/LATEST", "w").close()
     assert _latest_version(spark, root) == 3
 
 
 def test_partial_version_dir_is_not_recovered_to(spark, corpus, tmp_path):
-    """Round-8 review: a crash BETWEEN the vectors and meta writes
-    leaves a version dir with vectors/_SUCCESS but no meta — the old
-    scan called that complete, so torn-pointer recovery resolved to a
-    version whose read then failed on the missing meta. The scan now
-    probes meta/_SUCCESS (the truly-last commit of both index
-    writers), so recovery skips the partial dir, reads the previous
+    """A crash BETWEEN the vectors and manifest writes
+    leaves a version dir with vectors/_SUCCESS but no manifest — a
+    scan that called that complete would resolve torn-pointer recovery
+    to a version whose open then fails. The scan probes _MANIFEST (the
+    truly-last write of every group), so recovery skips the partial
+    dir, reads the previous
     complete version, and the next publish OVERWRITES the partial v3
     rather than orphaning it."""
     import os
     import shutil
 
     from scotustician_spark.operators.ann_index import (
-        _latest_version,
         publish_ivfpq_version,
         read_latest_ivfpq,
     )
+    from scotustician_spark.sources.snapshot import latest as _latest_version
 
     root = str(tmp_path / "partial")
     idx = build_ivfpq_index(
@@ -578,11 +573,11 @@ def test_partial_version_dir_is_not_recovered_to(spark, corpus, tmp_path):
     assert publish_ivfpq_version(idx, root) == 1
     assert publish_ivfpq_version(idx, root) == 2
 
-    # simulate the mid-publish crash: v3 has everything BUT meta, and
-    # the LATEST pointer was already deleted for the flip
+    # simulate the mid-publish crash: v3 has everything BUT its
+    # manifest, and the LATEST pointer was already deleted for the flip
     shutil.copytree(f"{root}/v2", f"{root}/v3")
-    shutil.rmtree(f"{root}/v3/meta")
-    shutil.rmtree(f"{root}/LATEST")
+    os.remove(f"{root}/v3/_MANIFEST")
+    os.remove(f"{root}/LATEST")
     assert os.path.exists(f"{root}/v3/vectors/_SUCCESS")
 
     assert _latest_version(spark, root) == 2  # v3 is torn: skipped
@@ -649,7 +644,7 @@ def test_index_writes_reject_lossy_column_types(spark, tmp_path):
 
 def test_compact_probe_heals_unfolded_tombstones(spark):
     """ann_compact_probe's served helper: a crash between the
-    tombstone write and the compaction leaves meta/_SUCCESS present
+    tombstone write and the compaction leaves _MANIFEST present
     with a non-empty tombstone set — the reopen path must fold the
     stragglers in (and read the live view), not serve doomed ids.
     Simulated by re-appending the doomed set to the compacted index
@@ -708,10 +703,10 @@ def test_compact_probe_heals_unfolded_tombstones(spark):
 def test_compact_build_crash_window_rebuilds(spark):
     """The OTHER crash window (round-9 advice, medium): tombstones
     commit BEFORE write_ivfpq_index, so a crash mid-build leaves
-    tombstones on disk with no meta/_SUCCESS. The reopen must take the
+    tombstones on disk with no _MANIFEST. The reopen must take the
     build branch again (duplicate tombstone appends collapse at read
     time) and still never serve the doomed slice. Simulated by
-    deleting meta/_SUCCESS from a healthy compacted index and dropping
+    deleting _MANIFEST from a healthy compacted index and dropping
     the session memo."""
     import hashlib
     import os
@@ -737,11 +732,11 @@ def test_compact_build_crash_window_rebuilds(spark):
     fp = MA._embeddings_fingerprint(sf, "compact")
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
     path = os.path.join(MA._INDEX_ROOT, f"ivfpqc_{tag}_{fp}")
-    os.remove(os.path.join(path, "meta", "_SUCCESS"))
+    os.remove(os.path.join(path, "_MANIFEST"))
     MA._OPEN_INDEX_CACHE[spark].pop(("ivfpq", path))
 
     rebuilt = MA._served_compacted_index(spark, sf)
-    assert os.path.exists(os.path.join(path, "meta", "_SUCCESS"))
+    assert os.path.exists(os.path.join(path, "_MANIFEST"))
     after = sorted(
         tuple(r)
         for r in ANN.probe_ivfpq_index(rebuilt, q, k=5, n_probe=2)

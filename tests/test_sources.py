@@ -369,10 +369,10 @@ def test_snapshot_publication_lifecycle(spark, tmp_path):
     import pytest
 
     from scotustician_spark.sources.snapshot import (
-        latest_snapshot_version,
-        prune_snapshots,
-        publish_snapshot,
-        read_snapshot,
+        latest as latest_snapshot_version,
+        prune as prune_snapshots,
+        publish as publish_snapshot,
+        read as read_snapshot,
     )
 
     root = str(tmp_path / "snap")
@@ -434,10 +434,10 @@ def test_snapshot_torn_publish_never_overwritten_or_pruned(spark, tmp_path):
     import json
 
     from scotustician_spark.sources.snapshot import (
-        latest_snapshot_version,
-        prune_snapshots,
-        publish_snapshot,
-        read_snapshot,
+        latest as latest_snapshot_version,
+        prune as prune_snapshots,
+        publish as publish_snapshot,
+        read as read_snapshot,
     )
 
     root = str(tmp_path / "snap")

@@ -814,8 +814,8 @@ def star_join_ab_section(spark, registry, x10_dir: str) -> list[str]:
 
 def ann_serving_ab_section() -> list[str]:
     """Static record of the round-9 ANN serving-path investigation
-    (reproduce with tools/ab_probe.py — isolated min-of-5 after
-    warmup, window_ranks as the scheduler-floor control)."""
+    (isolated min-of-5 after warmup, window_ranks as the
+    scheduler-floor control)."""
     return [
         "",
         "## ANN serving-path latency: round-8 'regression' resolved "
@@ -823,7 +823,7 @@ def ann_serving_ab_section() -> list[str]:
         "",
         "Round-8's driver bench showed ann_probe_only/ann_append_probe/",
         "lsh_ann_topk +20-30% vs round 7. Round-9 same-host A/Bs",
-        "(tools/ab_probe.py; fresh worktrees per commit; min-of-5 after",
+        "(fresh worktrees per commit; min-of-5 after",
         "warmup; sf0.1) found NO code-attributable regression: r8 code in",
         "a clean worktree matches r7 within the ±0.2s noise band, a",
         "100-junk-dir warehouse injection does not reproduce the slowdown,",
@@ -982,12 +982,6 @@ def main() -> None:
     lines += ann_serving_ab_section()
     lines += lpa_lines
     lines += x100_lines
-    # fold in the streaming-sink section if tools/streaming_bench.py
-    # has produced one (cached separately: streaming drains are
-    # stateful and much slower to regenerate than this audit)
-    stream_sec = os.path.join(repo, "spark-warehouse", "streaming_section.md")
-    if os.path.exists(stream_sec):
-        lines += ["", open(stream_sec).read().rstrip()]
     out = os.path.join(repo, "SCALING.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
