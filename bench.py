@@ -21,7 +21,10 @@ Output contract (round 6): stdout carries ONE compact JSON line —
 parsed:null because the per-query map (~2 KB for 69 queries) alone
 overflowed the driver's tail capture; the map now lives ONLY in
 BENCH_DETAIL.json (per-query mins, medians, paired
-spark/duckdb/ratio triples) next to this file.
+spark/duckdb/ratio triples) next to this file. The detail also
+records the generated classes Janino compiled in the warmup pass and
+in each timed pass (``codegen_classes``): a warm pass compiles ~0, so a
+non-zero run of them means the session's codegen cache is thrashing.
 """
 
 from __future__ import annotations
@@ -75,6 +78,7 @@ def duckdb_paired(registry, headline: list[str]) -> dict[str, float]:
 
 
 def main() -> None:
+    from scotustician_spark.metrics import codegen_counters
     from scotustician_spark.plans import QUERY_REGISTRY
     from scotustician_spark.plans import relational, vectors_text  # noqa: F401
     from scotustician_spark.session import get_spark
@@ -92,21 +96,25 @@ def main() -> None:
 
     # Untimed warmup pass (JIT/codegen + parquet footer cache + any
     # build-once index materialization), then N timed passes per query.
+    n0 = codegen_counters(spark)[0]
     for name in headline:
         QUERY_REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
             "overwrite"
         ).save()
+    compiled = {"warmup": codegen_counters(spark)[0] - n0, "passes": [0] * N_RUNS}
 
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     for name in headline:
         runs = []
-        for _ in range(N_RUNS):
+        for i in range(N_RUNS):
+            n0 = codegen_counters(spark)[0]
             t0 = time.perf_counter()
             QUERY_REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
                 "overwrite"
             ).save()
             runs.append(time.perf_counter() - t0)
+            compiled["passes"][i] += codegen_counters(spark)[0] - n0
         timings[name] = round(min(runs), 3)
         medians[name] = round(statistics.median(runs), 3)
 
@@ -118,7 +126,12 @@ def main() -> None:
         "sf": sf,
         "n_queries": len(timings),
     }
-    detail = {"queries": timings, "queries_median": medians, "sf": sf}
+    detail = {
+        "queries": timings,
+        "queries_median": medians,
+        "sf": sf,
+        "codegen_classes": compiled,
+    }
 
     if os.environ.get("SPARK_GRAFT_SKIP_DUCKDB") != "1":
         try:

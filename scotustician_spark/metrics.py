@@ -21,6 +21,18 @@ pipeline stage:
                                  (the executor-side task-time proxy)
 - ``scan_time_ms``             — summed scan time
 - ``peak_memory_bytes``        — summed operator peaks (spill alarm)
+- ``codegen_classes``          — classes Janino compiled (whole-stage
+                                 and expression code; a cache hit
+                                 compiles none)
+- ``codegen_ms``               — their compile time
+
+The codegen pair comes from JVM-wide counters (``codegen_counters``),
+read at stage entry and at each action's callback; a row gets the
+change since the previous read, and whatever compiled after the
+stage's last callback goes to its last row, so a stage's rows sum to
+its total. On a warm session both read ~0: a non-zero run of them
+means the generated-class cache is thrashing (or a query inlines a
+per-run literal into its generated code).
 
 The walk dedupes reused exchanges/subqueries (ReusedExchangeExec
 executes once; counting its subtree twice would double the bytes) and
@@ -44,6 +56,7 @@ queries.
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,7 +75,20 @@ _SUM_KEYS = {
 METRICS_SCHEMA = (
     "stage string, fn_name string, wall_ms double, rows_out bigint, "
     + ", ".join(f"{v} bigint" for v in _SUM_KEYS.values())
+    + ", codegen_classes bigint, codegen_ms double"
 )
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, float]:
+    """``(classes compiled, compile ms)`` since the JVM started: the
+    count of Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME``
+    histogram (one update per Janino compile) and
+    ``CodeGenerator.compileTime``. JVM-wide, so every thread's
+    compiles count, executor threads included in local mode."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n.getCount()), int(ns) / 1e6
 
 
 def _walk_plan_metrics(node, acc: dict, seen: set, want_rows: list) -> None:
@@ -114,6 +140,9 @@ class StageMetricsCollector:
         ensure_callback_server_started(spark.sparkContext._gateway)
         self._rows: list[dict] = []
         self._current: str | None = None
+        self._codegen_mark = (0, 0.0)
+        # the mark moves on the listener thread and on the stage's own
+        self._codegen_lock = threading.Lock()
         outer = self
 
         class _QEL:
@@ -139,6 +168,7 @@ class StageMetricsCollector:
                 }
                 for v in _SUM_KEYS.values():
                     row[v] = acc.get(v, 0)
+                row["codegen_classes"], row["codegen_ms"] = outer._codegen_since_mark()
                 outer._rows.append(row)
 
             def onFailure(self, funcName, qe, exception):
@@ -158,12 +188,28 @@ class StageMetricsCollector:
 
     @contextmanager
     def stage(self, name: str):
+        first = len(self._rows)
+        self._codegen_mark = codegen_counters(self._spark)
         self._current = name
         try:
             yield self
         finally:
             self._drain()
             self._current = None
+            if len(self._rows) > first:
+                last = self._rows[-1]
+                n, ms = self._codegen_since_mark()
+                last["codegen_classes"] += n
+                last["codegen_ms"] = round(last["codegen_ms"] + ms, 3)
+
+    def _codegen_since_mark(self) -> tuple[int, float]:
+        """The codegen counters' change since the last read; moves the
+        mark."""
+        with self._codegen_lock:
+            n, ms = codegen_counters(self._spark)
+            n0, ms0 = self._codegen_mark
+            self._codegen_mark = (n, ms)
+        return n - n0, round(ms - ms0, 3)
 
     def _drain(self) -> None:
         try:

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import snapshot
+from ..sources.sinks import observed_write
 from .similarity import (
     _d2r,
     _pq_subvecs,
@@ -438,8 +439,12 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
       candidates come from codes).
     - tombstones/: truncated to the empty pinned-schema relation.
 
-    The manifest is left as the build wrote it: schemas are unchanged,
-    and its row counts stay those of the build.
+    The group is rewritten in place under ``snapshot.write_group``'s
+    rule: everything is read first, the ``_MANIFEST`` is dropped before
+    the first rewrite, and a fresh one carrying the compacted row
+    counts is written last. A compaction stopped midway leaves an
+    incomplete group — no open treats it as an index, and the served
+    path rebuilds it.
 
     Returns {"removed": n, "cells_rewritten": n, "cells_dropped": n}.
     Idempotent: a second call is a no-op."""
@@ -447,14 +452,16 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
     n_doom = tombs.count()
     if n_doom == 0:
         return {"removed": 0, "cells_rewritten": 0, "cells_dropped": 0}
-    tables, _ = snapshot.open_group(spark, path)
+    tables, manifest = snapshot.open_group(spark, path)
     packed = tables["codes"]
-    touched = (
+    hits = (  # (cell, its doomed rows) per touched cell
         packed.join(F.broadcast(tombs), "cid")
-        .select("cell")
-        .distinct()
+        .groupBy("cell")
+        .count()
         .localCheckpoint(eager=True)
     )
+    touched = hits.select("cell")
+    n_hits = dict(hits.collect())
     survivors = (
         packed.join(F.broadcast(touched), "cell")
         .join(F.broadcast(tombs), "cid", "left_anti")
@@ -466,6 +473,12 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
             survivors.select("cell").distinct(), "cell", "left_anti"
         ).collect()
     ]
+    vecs = (
+        tables["vectors"]
+        .join(F.broadcast(tombs), "cid", "left_anti")
+        .localCheckpoint(eager=True)
+    )
+    snapshot.drop_manifest(spark, path)
     prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
@@ -480,23 +493,20 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
     for cell in emptied:
         fs, hcell = snapshot.hadoop_fs(spark, f"{path}/codes/cell={cell}")
         fs.delete(hcell, True)
-    vecs = (
-        tables["vectors"]
-        .join(F.broadcast(tombs), "cid", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    (
-        vecs.repartitionByRange(F.col("cid"))
-        .sortWithinPartitions("cid")
-        .write.mode("overwrite")
-        .parquet(f"{path}/vectors")
-    )
+    n_vectors = observed_write(
+        vecs.repartitionByRange(F.col("cid")).sortWithinPartitions("cid"),
+        f"{path}/vectors",
+    )["n_rows"]
     spark.createDataFrame([], "cid long").write.mode("overwrite").parquet(
         f"{path}/tombstones"
     )
+    counts = manifest["tables"]
+    counts["codes"]["rows"] -= sum(n_hits.values())
+    counts["vectors"]["rows"] = n_vectors
+    snapshot.write_manifest(spark, path, manifest)
     return {
         "removed": n_doom,
-        "cells_rewritten": touched.count() - len(emptied),
+        "cells_rewritten": len(n_hits) - len(emptied),
         "cells_dropped": len(emptied),
     }
 

@@ -106,6 +106,24 @@ def get_spark(
         # dimension tables carry explicit broadcast() hints at call sites.
         .config("spark.sql.autoBroadcastJoinThreshold", "-1")
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
+        # Janino-compiled classes live in one JVM-wide LRU cache whose
+        # default of 100 entries is below every working set here: the
+        # 7-query perfbench mix generates 110 distinct classes, one ETL
+        # run ~210, the 201 registry queries 3,075 (sf0.01). At 100,
+        # each warm pass recompiled 62-82 classes (and the JIT redid
+        # them); 4096 holds a full registry pass, so a warm pass
+        # compiles ~0. Metaspace after that pass: 208-221 MB at 100,
+        # 222-225 MB uncapped. A static conf: read once, when the JVM
+        # first generates code.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # ...and keyed on the source text, which by default names each
+        # whole-stage class after its codegen stage id. AQE numbers the
+        # stages in the order their inputs finish, so the same query
+        # can number them differently from run to run and miss the
+        # cache: an identical second ETL run compiled 4 to 10 classes,
+        # 4 every time with ids out of the names (stack traces lose
+        # the stage id; plans still print it).
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

@@ -22,6 +22,10 @@ A crash mid-publish leaves a version without _MANIFEST (ignored, and
 reused by the next publish) or a complete version the pointer does not
 name yet (never overwritten: the next version number is past both).
 
+A group rewritten in place (``write_group`` over an old one, an index
+compaction) drops its _MANIFEST first and writes the new one last, so
+a crash mid-rewrite leaves it incomplete, never stale.
+
 Callers: every persisted ANN index is a group and every served index
 version a published one (operators/ann_index.py), and
 ``streaming.incremental.exactly_once_merge_sink`` publishes one version
@@ -95,9 +99,7 @@ def write_group(
     ``partition_by[name]`` as partition columns), then ``_MANIFEST``.
     A stale manifest is removed first, so a group rewritten in place is
     incomplete until its new manifest lands. Returns the manifest."""
-    fs, hmanifest = hadoop_fs(spark, f"{path}/{MANIFEST}")
-    if fs.exists(hmanifest):
-        fs.delete(hmanifest, False)
+    drop_manifest(spark, path)
     entries = {}
     for name, df in tables.items():
         parts = tuple((partition_by or {}).get(name, ()))
@@ -109,8 +111,22 @@ def write_group(
         )
         entries[name] = {"schema": schema.jsonValue(), "rows": n}
     manifest = {**(fields or {}), "tables": entries}
-    _write_text(spark, f"{path}/{MANIFEST}", json.dumps(manifest))
+    write_manifest(spark, path, manifest)
     return manifest
+
+
+def drop_manifest(spark: SparkSession, path: str) -> None:
+    """Mark the group at ``path`` incomplete — the first step of any
+    in-place rewrite of its tables."""
+    fs, hmanifest = hadoop_fs(spark, f"{path}/{MANIFEST}")
+    if fs.exists(hmanifest):
+        fs.delete(hmanifest, False)
+
+
+def write_manifest(spark: SparkSession, path: str, manifest: dict) -> None:
+    """Complete the group at ``path`` — the last step of any write of
+    its tables; ``manifest["tables"]`` must hold their true row counts."""
+    _write_text(spark, f"{path}/{MANIFEST}", json.dumps(manifest))
 
 
 def open_group(spark: SparkSession, path: str) -> tuple[dict[str, DataFrame], dict]:

@@ -7,6 +7,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from scotustician_spark.metrics import codegen_counters
 from scotustician_spark.pipeline import run_pipeline
 from tests.fixtures_oa import make_corpus, write_corpus_json
 
@@ -114,6 +115,32 @@ def test_stage_metrics_relation(result, spark):
     # persisted alongside the other run artifacts
     persisted = spark.read.parquet(str(d / "out" / "stage_metrics"))
     assert persisted.count() == m.count()
+    # each row carries the Janino compiles of its action; the first
+    # run in the session generates the flatten stage's code
+    assert {"codegen_classes", "codegen_ms"} <= set(m.columns)
+    assert rows["flatten"]["codegen_classes"] > 0
+    assert rows["flatten"]["codegen_ms"] > 0
+
+
+def test_second_identical_run_reuses_generated_classes(pipeline_run, spark):
+    """An identical second run in the same session finds its generated
+    classes in Spark's codegen cache (``spark.sql.codegen.cache.
+    maxEntries``, sized in ``get_spark``). At the default of 100 entries
+    it recompiled ~204 of them. The 4 allowed are ``write_quarantine``'s
+    ``quarantined_at`` and ``run_summary``'s ``generated_at`` (2 each):
+    both are ``current_timestamp()``, which folds to a per-run literal
+    that Spark inlines into the generated code."""
+    d = pipeline_run["dir"]
+    n0, _ = codegen_counters(spark)
+    run_pipeline(
+        spark,
+        str(d / "corpus"),
+        out_dir=str(d / "out_again"),
+        n_clusters=3,
+        collect_metrics=True,
+    )
+    n1, _ = codegen_counters(spark)
+    assert n1 - n0 <= 4, n1 - n0
 
 
 def test_run_releases_its_caches(pipeline_run):

@@ -38,8 +38,15 @@ class _Crash(Exception):
     pass
 
 
-def _crash_after(mp: pytest.MonkeyPatch, k: int) -> None:
-    """Raise ``_Crash`` right after the k-th write step of a publish."""
+_PUBLISH_STEPS = tuple(
+    (snapshot, name) for name in ("observed_write", "_write_text", "_replace")
+)
+
+
+def _crash_after(mp: pytest.MonkeyPatch, k: int, steps=_PUBLISH_STEPS) -> None:
+    """Raise ``_Crash`` right after the k-th call to any of ``steps``
+    (``(owner, attribute)`` pairs): by default, the k-th write step of a
+    publish."""
     done = [0]
 
     def step(fn):
@@ -52,8 +59,8 @@ def _crash_after(mp: pytest.MonkeyPatch, k: int) -> None:
 
         return wrapped
 
-    for name in ("observed_write", "_write_text", "_replace"):
-        mp.setattr(snapshot, name, step(getattr(snapshot, name)))
+    for owner, name in steps:
+        mp.setattr(owner, name, step(getattr(owner, name)))
 
 
 def _complete(root: str) -> dict[int, list]:
@@ -262,3 +269,61 @@ def test_opening_a_published_group_runs_no_job(spark, vectors, tmp_path):
     opened, n = _jobs(spark, lambda: snapshot.read(spark, snap))
     assert n == 0
     assert {k: df.count() for k, df in opened.items()} == {"orders": 10, "users": 3}
+
+
+def test_compaction_faults(spark, sf_dir, tmp_path, monkeypatch):
+    """A compaction rewrites a complete group in place: its codes,
+    vectors and tombstones, then a fresh ``_MANIFEST``. Stopped after
+    each rewrite step it leaves no ``_MANIFEST``, so the served path
+    rebuilds the index; once a manifest is written its row counts are
+    the files' counts (the build's manifest used to survive, with
+    stale counts, and kept a half-rewritten group complete)."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from scotustician_spark.operators import ann_index as ANN
+    from scotustician_spark.plans import multimodal_ann as MA
+
+    def served(root):  # each root is fresh, so no open is memoized yet
+        monkeypatch.setattr(MA, "_INDEX_ROOT", root)
+        return MA._served_compacted_index(spark, sf_dir)
+
+    def group_dir(root):
+        (name,) = os.listdir(root)
+        return os.path.join(root, name)
+
+    # a built, tombstoned, not yet compacted index: the template
+    template = str(tmp_path / "template")
+    with monkeypatch.context() as mp:
+        mp.setattr(ANN, "compact_ivfpq_index", lambda *a: None)
+        served(template)
+    doomed = ANN.read_tombstones(spark, group_dir(template)).count()
+    assert doomed > 0
+
+    rewrites = (
+        (DataFrameWriter, "save"),
+        (DataFrameWriter, "parquet"),
+        (snapshot, "_write_text"),
+    )
+    for k in range(1, 5):  # codes, vectors, tombstones, manifest
+        root = str(tmp_path / f"k{k}")
+        shutil.copytree(template, root)
+        with monkeypatch.context() as mp:
+            _crash_after(mp, k, rewrites)
+            with pytest.raises(_Crash):
+                served(root)
+        path = group_dir(root)
+        assert os.path.exists(os.path.join(path, snapshot.MANIFEST)) == (k == 4)
+
+        idx = served(root)  # rebuilds unless the manifest landed
+        manifest = snapshot.open_group(spark, path)[1]
+        for name, t in manifest["tables"].items():
+            on_disk = ds.dataset(
+                os.path.join(path, name), format="parquet", partitioning="hive"
+            ).count_rows()
+            assert t["rows"] == on_disk, (k, name)
+        live = idx.vectors.count()
+        assert manifest["tables"]["vectors"]["rows"] == live
+        assert ANN.read_tombstones(spark, path).count() == 0
+        corpus = ds.dataset(os.path.join(sf_dir, "embeddings.parquet"))
+        assert live == corpus.count_rows() - doomed
